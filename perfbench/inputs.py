@@ -3,12 +3,18 @@
 Seed 0 is the sf0.01 fixture in ``fixture/`` as it is. Any other seed is
 a seeded resample of it with the same schema: every row is kept once,
 the surrogate keys (customer, order, user, document, vector) are
-relabelled by a seeded permutation of their own values, consistently
-across the tables that reference them, and the rows of every table are
-shuffled. Sizes and value distributions stay those of the fixture, so
-the work per gate stays comparable across seeds while the results
-differ. The DuckDB oracles run on the same files, so they still judge
-every result.
+relabelled to new values drawn from a range far wider than the
+fixture's, consistently across the tables that reference them, and the
+rows of every table are shuffled. A key ``k`` becomes
+``B(k div 100) * 100 + P(k mod 100)``: ``B`` draws a distinct block
+number per block of 100 keys and ``P`` permutes the offsets within each
+block. So the set of key values, and with it every gate's result,
+changes with the seed, while which keys share a block stays as in the
+fixture (the synthetic graph of ``doc_neardup_clusters`` links the
+documents of a block, so its work stays the same). Sizes and value
+distributions stay those of the fixture, so the work per gate stays
+comparable across seeds. The DuckDB oracles run on the same files, so
+they still judge every result.
 """
 
 from __future__ import annotations
@@ -38,6 +44,9 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+BLOCK = 100
+BLOCK_RANGE = 10_000_000  # new keys lie in [0, BLOCK * BLOCK_RANGE)
 
 # key domain -> [(table, column), ...]; the first pair owns the values
 RELABEL = {
@@ -70,7 +79,7 @@ def _resample(seed: int, out: str) -> None:
     for refs in RELABEL.values():
         owner, col = refs[0]
         keys = np.unique(tables[owner].column(col).to_numpy())
-        image = keys[rng.permutation(len(keys))]
+        image = _relabel(keys, rng)
         for table, column in refs:
             t = tables[table]
             old = t.column(column)
@@ -82,6 +91,19 @@ def _resample(seed: int, out: str) -> None:
     for name, t in tables.items():
         t = t.take(pa.array(rng.permutation(t.num_rows)))
         pq.write_table(t, os.path.join(out, f"{name}.parquet"))
+
+
+def _relabel(keys: np.ndarray, rng) -> np.ndarray:
+    """New labels for the sorted distinct ``keys``: a seeded distinct block
+    number for each block of ``BLOCK`` keys, and a seeded permutation of
+    the offsets within each block."""
+    hi, lo = np.divmod(keys, BLOCK)
+    blocks = np.unique(hi)
+    new_hi = rng.choice(BLOCK_RANGE, len(blocks), replace=False)[np.searchsorted(blocks, hi)]
+    # the keys of a block, in random order, take the block's offsets in ascending order
+    new_lo = np.empty_like(lo)
+    new_lo[np.lexsort((rng.random(len(keys)), hi))] = lo
+    return new_hi * BLOCK + new_lo
 
 
 def input_rows(sf_dir: str, oracle_sqls) -> int:

@@ -91,6 +91,20 @@ def setup(cores: int, repeats: int = SETUP_REPEATS) -> tuple:
     return spark, queries, timings
 
 
+def cpu_times() -> list[int]:
+    """The host's cumulative CPU times from /proc/stat: user, nice,
+    system, idle, iowait, irq, softirq, steal."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:9]]
+
+
+def steal_pct(before: list[int], after: list[int]) -> float:
+    """Share of the host's CPU time between two readings that the
+    hypervisor gave to other guests, in percent."""
+    d = [b - a for a, b in zip(before, after)]
+    return 100.0 * d[7] / max(1, sum(d))
+
+
 def jvm_peak_rss_mb() -> float:
     from pyspark import SparkContext
 
@@ -136,8 +150,11 @@ def run_batch(args, spark, queries, work: str) -> tuple[dict, int, int]:
             break
     if warm is not None:
         log(f"warm-up passes {time.perf_counter() - t0:.1f} s")
+        cpu = cpu_times()
         passes = batch.timed_passes(runner, args.seconds)
-        log(f"timed passes {[round(batch.pass_wall(p), 2) for p in passes]} s")
+        m["host.steal_pct"] = (steal_pct(cpu, cpu_times()), "%")
+        log(f"timed passes {[round(batch.pass_wall(p), 2) for p in passes]} s, "
+            f"CPU steal {m['host.steal_pct'][0]:.1f}%")
         if passes and not runner.failed:
             rows = inputs.input_rows(sf_dir, [queries[g].oracle for g in gates])
             m.update(batch.end_to_end(passes, rows))
@@ -150,11 +167,12 @@ def run_batch(args, spark, queries, work: str) -> tuple[dict, int, int]:
 
 
 def run_stream(args, spark, work: str) -> tuple[dict, int, int]:
+    import inputs
     import layers
     import stream
 
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    files = stream.generate(args.seed)
+    files = stream.generate(inputs.inputs_dir(args.seed))
     counts = {"attempted": 0, "failed": 0}
 
     def one(staged: list, listener=None) -> dict:
@@ -171,11 +189,13 @@ def run_stream(args, spark, work: str) -> tuple[dict, int, int]:
     log(f"warm-up drain {time.perf_counter() - t0:.1f} s")
     drains: list[dict] = []
     spent = 0.0
+    cpu = cpu_times()
     while not drains or spent + statistics.median(map(stream.drain_wall, drains)) <= args.seconds:
         drains.append(one(files))
         spent += stream.drain_wall(drains[-1])
         log(f"drain {stream.drain_wall(drains[-1]):.1f} s")
-    m: dict = {}
+    m: dict = {"host.steal_pct": (steal_pct(cpu, cpu_times()), "%")}
+    log(f"CPU steal {m['host.steal_pct'][0]:.1f}%")
     if not counts["failed"]:
         m.update(stream.end_to_end(drains))
         if args.trace:

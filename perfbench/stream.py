@@ -1,12 +1,16 @@
-"""The ``stream_stateful`` workload: a seeded bid stream drained through
-three stateful streaming queries, one micro-batch after another.
+"""The ``stream_stateful`` workload: the seed's ``events`` table (the
+repository's NEXMark stand-in, see inputs.py) replayed as a stream and
+drained through three stateful streaming queries, one micro-batch after
+another.
 
-The input is staged as parquet files, one per trigger
-(``maxFilesPerTrigger=1``). File ``f`` holds the bids of a contiguous
-event-time slice, and every auction's bids live in one file, so
-``match_recognize_stream`` (arrival-order mode) sees each key in order.
-Bidders span files, so the user-state ParDo carries state across
-triggers.
+The events are staged as parquet files, one per trigger
+(``maxFilesPerTrigger=1``), in ``event_id`` order (which is event-time
+order): file ``f`` holds the ``f``-th contiguous slice. A user's events
+span files, so the window count, the CEP buffer and the user-state
+ParDo all carry state across triggers, and since the files arrive in
+slice order each user's events arrive in order, as
+``match_recognize_stream`` requires in arrival-order mode (it raises on
+an out-of-order key, which counts as a failed query).
 
 Each query runs with ``Trigger(availableNow=True)`` into a parquet file
 sink with a checkpoint: a closed loop where the next micro-batch starts
@@ -29,64 +33,28 @@ import pyarrow.parquet as pq
 
 N_FILES = 5
 WARMUP_FILES = 1
-AUCTIONS_PER_FILE = 40
-SLICE_S = 10
-BIDDERS = 400
-EPOCH = pd.Timestamp("2026-01-01").value // 1000  # microseconds
 
-BID_SCHEMA = pa.schema(
-    [
-        ("seq", pa.int64()),
-        ("ts", pa.timestamp("us", tz="UTC")),
-        ("auction", pa.int64()),
-        ("bidder", pa.int64()),
-        ("price", pa.int64()),
-        ("lvl", pa.string()),
-    ]
-)
+# NEXMark Q5 shape on the events table: sliding windows per user, with
+# the hour the repository's nexmark_q5_hot_items gate windows by
+WINDOW_S, SLIDE_S, DELAY_S = 3600, 1800, 1800
 
-SPARK_SCHEMA = "seq long, ts timestamp, auction long, bidder long, price long, lvl string"
+SPARK_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
+COLUMNS = ["event_id", "ts", "user_id", "event_type", "value"]
 
-PATTERN = "L M{1,3} H"
+# a view, one to three clicks, then a purchase
+SYMBOLS = {"V": "view", "C": "click", "P": "purchase"}
+PATTERN = "V C{1,3} P"
 QUERIES = ("window_count", "cep_stream", "pardo_record")
 
 
-def generate(seed: int) -> list[pd.DataFrame]:
-    """One frame per staged file, in delivery order."""
-    rng = np.random.default_rng(seed + 7_919)
-    files, seq0, auction0 = [], 0, 0
-    for f in range(N_FILES):
-        sizes = rng.integers(20, 61, AUCTIONS_PER_FILE)
-        n = int(sizes.sum())
-        auction = np.repeat(np.arange(auction0, auction0 + AUCTIONS_PER_FILE), sizes)
-        auction0 += AUCTIONS_PER_FILE
-        t = np.sort(rng.integers(0, SLICE_S * 1_000_000, n)) + f * SLICE_S * 1_000_000
-        # per-auction random-walk prices; rows are then put in time order
-        start = np.repeat(rng.integers(10_000, 100_000, AUCTIONS_PER_FILE), sizes)
-        step = rng.integers(-500, 1_500, n)
-        price = start + _grouped_cumsum(step, sizes)
-        perm = rng.permutation(n)  # which auction bid lands at which instant
-        bidder = (rng.zipf(1.3, n) - 1) % BIDDERS
-        lvl = rng.choice(np.array(["L", "M", "H"]), n, p=[0.3, 0.5, 0.2])
-        frame = pd.DataFrame(
-            {
-                "seq": np.arange(seq0, seq0 + n, dtype=np.int64),
-                "ts": pd.to_datetime(EPOCH + t, unit="us", utc=True),
-                "auction": auction[perm],
-                "bidder": bidder.astype(np.int64),
-                "price": price[perm].astype(np.int64),
-                "lvl": lvl,
-            }
-        )
-        seq0 += n
-        files.append(frame)
-    return files
-
-
-def _grouped_cumsum(step: np.ndarray, sizes: np.ndarray) -> np.ndarray:
-    total = np.cumsum(step)
-    offsets = np.repeat(np.concatenate(([0], total[np.cumsum(sizes)[:-1] - 1])), sizes)
-    return total - offsets
+def generate(sf_dir: str) -> list[pd.DataFrame]:
+    """The ``events`` table of ``sf_dir`` in ``event_id`` order, cut into
+    ``N_FILES`` contiguous slices of (nearly) equal size: one frame per
+    staged file, in delivery order."""
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"), columns=COLUMNS).to_pandas()
+    events = events.sort_values("event_id", ignore_index=True)
+    events["ts"] = events["ts"].dt.tz_localize("UTC")  # the fixture's ts is UTC wall time
+    return [events.iloc[i].reset_index(drop=True) for i in np.array_split(np.arange(len(events)), N_FILES)]
 
 
 def stage(files: list[pd.DataFrame], src_dir: str) -> None:
@@ -95,8 +63,8 @@ def stage(files: list[pd.DataFrame], src_dir: str) -> None:
     os.makedirs(src_dir)
     base = time.time() - 10 * len(files)
     for i, frame in enumerate(files):
-        path = os.path.join(src_dir, f"bids-{i:04d}.parquet")
-        pq.write_table(pa.Table.from_pandas(frame, BID_SCHEMA, preserve_index=False), path)
+        path = os.path.join(src_dir, f"events-{i:04d}.parquet")
+        pq.write_table(pa.Table.from_pandas(frame, preserve_index=False), path)
         os.utime(path, (base + i, base + i))
 
 
@@ -111,7 +79,7 @@ def build_queries(spark, src_dir: str) -> dict:
     from incubator_beam_spark.plans.cep import match_recognize_stream
     from incubator_beam_spark.streaming.userstate import stateful_pardo
 
-    def bids():
+    def events():
         return (
             spark.readStream.schema(SPARK_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -119,53 +87,49 @@ def build_queries(spark, src_dir: str) -> dict:
         )
 
     window_count = (
-        bids()
-        .withWatermark("ts", "5 seconds")
-        .groupBy(F.window("ts", "10 seconds", "5 seconds"), "auction")
+        events()
+        .withWatermark("ts", f"{DELAY_S} seconds")
+        .groupBy(F.window("ts", f"{WINDOW_S} seconds", f"{SLIDE_S} seconds"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.unix_micros(F.col("window.start")).alias("window_start"),
             F.unix_micros(F.col("window.end")).alias("window_end"),
-            "auction",
+            "user_id",
             "n",
         )
     )
     cep = match_recognize_stream(
-        bids(),
-        partition_by="auction",
-        order_by="seq",
-        define={
-            "L": F.col("lvl") == "L",
-            "M": F.col("lvl") == "M",
-            "H": F.col("lvl") == "H",
-        },
+        events(),
+        partition_by="user_id",
+        order_by="event_id",
+        define={sym: F.col("event_type") == kind for sym, kind in SYMBOLS.items()},
         pattern=PATTERN,
         measures={
-            "start_seq": ("first", "L", "seq"),
-            "end_seq": ("last", "H", "seq"),
-            "n_mid": ("count", "M"),
+            "start_event": ("first", "V", "event_id"),
+            "end_event": ("last", "P", "event_id"),
+            "n_clicks": ("count", "C"),
         },
     )
 
     def process(key, pdf, ctx):
         best = ctx.read("max")
         out = []
-        for s, p in zip(pdf["seq"], pdf["price"]):
-            if best is None or p > best:
-                best = int(p)
-                out.append((key, int(s), best))
+        for e, v in zip(pdf["event_id"], pdf["value"]):
+            if best is None or v > best:
+                best = float(v)
+                out.append((key, int(e), best))
         ctx.write("max", best)
         return out
 
     schema = T.StructType(
         [
-            T.StructField("bidder", T.LongType()),
-            T.StructField("seq", T.LongType()),
-            T.StructField("price", T.LongType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_id", T.LongType()),
+            T.StructField("value", T.DoubleType()),
         ]
     )
     pardo = stateful_pardo(
-        bids(), "bidder", schema, process, timer_domain="none", time_sorted_by="seq"
+        events(), "user_id", schema, process, timer_domain="none", time_sorted_by="event_id"
     )
     return {
         "window_count": (window_count, "append"),
@@ -177,36 +141,39 @@ def build_queries(spark, src_dir: str) -> dict:
 # -- batch references (pandas, independent of the engine) -------------------
 
 
-def reference(name: str, bids: pd.DataFrame, watermark_us: int | None) -> pd.DataFrame:
+def final_watermark_us(events: pd.DataFrame) -> int:
+    """The watermark after the last event: the largest event time, in
+    the whole milliseconds Spark tracks it in, less the delay."""
+    return (int(_micros(events["ts"]).max()) // 1000 - DELAY_S * 1000) * 1000
+
+
+def reference(name: str, events: pd.DataFrame) -> pd.DataFrame:
     if name == "window_count":
-        return _ref_window_count(bids, watermark_us)
+        return _ref_window_count(events, final_watermark_us(events))
     if name == "cep_stream":
-        return _ref_cep(bids)
-    return _ref_pardo(bids)
+        return _ref_cep(events)
+    return _ref_pardo(events)
 
 
-def _ref_window_count(bids: pd.DataFrame, watermark_us: int | None) -> pd.DataFrame:
-    """Sliding 10 s / 5 s windows per auction; append mode emits a window
-    once the watermark passes its end."""
-    t = _micros(bids["ts"])
-    size, slide = 10_000_000, 5_000_000
+def _ref_window_count(events: pd.DataFrame, watermark_us: int) -> pd.DataFrame:
+    """Sliding windows per user; append mode emits a window once the
+    watermark reaches its end."""
+    t = _micros(events["ts"])
+    size, slide = WINDOW_S * 1_000_000, SLIDE_S * 1_000_000
     last = (t // slide) * slide
     parts = []
     for k in range(size // slide):
         start = last - k * slide
-        parts.append(pd.DataFrame({"start": start, "auction": bids["auction"]}))
+        parts.append(pd.DataFrame({"start": start, "user_id": events["user_id"]}))
     w = pd.concat(parts, ignore_index=True)
-    w = w.groupby(["start", "auction"], as_index=False).size()
+    w = w.groupby(["start", "user_id"], as_index=False).size()
     w["end"] = w["start"] + size
-    if watermark_us is None:
-        w = w.iloc[0:0]
-    else:
-        w = w[w["end"] <= watermark_us]
+    w = w[w["end"] <= watermark_us]
     return pd.DataFrame(
         {
             "window_start": w["start"].astype("int64"),
             "window_end": w["end"].astype("int64"),
-            "auction": w["auction"].astype("int64"),
+            "user_id": w["user_id"].astype("int64"),
             "n": w["size"].astype("int64"),
         }
     )
@@ -216,24 +183,25 @@ def _micros(ts: pd.Series) -> pd.Series:
     return (ts - pd.Timestamp(0, tz="UTC")) // pd.Timedelta(microseconds=1)
 
 
-_PAT = re.compile("LM{1,3}H")
+_PAT = re.compile(PATTERN.replace(" ", ""))
+_LETTER = {kind: sym for sym, kind in SYMBOLS.items()}
 
 
-def _ref_cep(bids: pd.DataFrame) -> pd.DataFrame:
+def _ref_cep(events: pd.DataFrame) -> pd.DataFrame:
     rows = []
-    for auction, g in bids.sort_values("seq").groupby("auction", sort=False):
-        s = "".join(g["lvl"])
-        seqs = g["seq"].to_numpy()
+    for user, g in events.sort_values("event_id").groupby("user_id", sort=False):
+        s = "".join(_LETTER.get(k, "-") for k in g["event_type"])
+        ids = g["event_id"].to_numpy()
         for m in _PAT.finditer(s):
-            rows.append((auction, int(seqs[m.start()]), int(seqs[m.end() - 1]), m.end() - m.start() - 2))
-    return pd.DataFrame(rows, columns=["auction", "start_seq", "end_seq", "n_mid"])
+            rows.append((user, int(ids[m.start()]), int(ids[m.end() - 1]), m.end() - m.start() - 2))
+    return pd.DataFrame(rows, columns=["user_id", "start_event", "end_event", "n_clicks"])
 
 
-def _ref_pardo(bids: pd.DataFrame) -> pd.DataFrame:
-    b = bids.sort_values("seq")
-    prev = b.groupby("bidder")["price"].cummax().groupby(b["bidder"]).shift(1)
-    rec = b[prev.isna() | (b["price"] > prev)]
-    return rec[["bidder", "seq", "price"]].reset_index(drop=True)
+def _ref_pardo(events: pd.DataFrame) -> pd.DataFrame:
+    e = events.sort_values("event_id")
+    prev = e.groupby("user_id")["value"].cummax().groupby(e["user_id"]).shift(1)
+    rec = e[prev.isna() | (e["value"] > prev)]
+    return rec[["user_id", "event_id", "value"]].reset_index(drop=True)
 
 
 # -- running a drain ---------------------------------------------------------
@@ -295,23 +263,37 @@ def _await_listener(listener, n: int, timeout: float = 30.0) -> None:
 
 
 def check_drain(result: dict, files: list[pd.DataFrame]) -> list[str]:
-    """Each sink must equal its batch reference as a multiset; return the
-    names of the queries that do not."""
-    bids = pd.concat(files, ignore_index=True)
+    """Each sink must equal its batch reference as a multiset, and the
+    windowed count's last watermark must be the one the events imply;
+    return what is wrong. A reference without rows checks nothing, so it
+    counts as wrong too."""
+    events = pd.concat(files, ignore_index=True)
     wrong = []
     for name, r in result.items():
-        wm = next(
-            (p["eventTime"]["watermark"] for p in reversed(r["progress"]) if "watermark" in p.get("eventTime", {})),
-            None,
-        )
-        ref = reference(name, bids, int(pd.Timestamp(wm).value // 1000) if wm else None)
+        ref = reference(name, events)
+        if ref.empty:
+            wrong.append(f"{name}: the reference has no rows")
+            continue
+        if name == "window_count":
+            wm = last_watermark_us(r["progress"])
+            if wm != final_watermark_us(events):
+                wrong.append(f"{name}: watermark {wm}, expected {final_watermark_us(events)} (us)")
         got = pq.read_table(r["sink"]).to_pandas() if os.listdir(r["sink"]) else ref.iloc[0:0]
         cols = sorted(ref.columns)
-        a = got[cols].astype("int64").sort_values(cols).reset_index(drop=True)
-        b = ref[cols].astype("int64").sort_values(cols).reset_index(drop=True)
-        if not a.equals(b):
-            wrong.append(f"{name}: sink has {len(a)} rows, reference {len(b)}")
+        x = got[cols].astype(ref.dtypes[cols].to_dict()).sort_values(cols).reset_index(drop=True)
+        y = ref[cols].sort_values(cols).reset_index(drop=True)
+        if not x.equals(y):
+            wrong.append(f"{name}: sink has {len(x)} rows, reference {len(y)}")
     return wrong
+
+
+def last_watermark_us(progress: list[dict]) -> int | None:
+    """The watermark of the query's last progress report that has one."""
+    for p in reversed(progress):
+        wm = p.get("eventTime", {}).get("watermark")
+        if wm is not None:
+            return pd.Timestamp(wm).value // 1000
+    return None
 
 
 def drain_wall(result: dict) -> float:
