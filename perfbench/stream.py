@@ -10,7 +10,8 @@ span files, so the window count, the CEP buffer and the user-state
 ParDo all carry state across triggers, and since the files arrive in
 slice order each user's events arrive in order, as
 ``match_recognize_stream`` requires in arrival-order mode (it raises on
-an out-of-order key, which counts as a failed query).
+an out-of-order key, and a query that raises stops the run with exit
+code 1).
 
 Each query runs with ``Trigger(availableNow=True)`` into a parquet file
 sink with a checkpoint: a closed loop where the next micro-batch starts
