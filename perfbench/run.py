@@ -22,11 +22,13 @@ import statistics
 import sys
 import time
 
+import host
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SPEC = os.path.join(ROOT, "BENCHMARK.json")
 OUT = os.path.join(HERE, ".out")
-SETUP_REPEATS = 5
+SETUP_REPEATS = 9
 PACKAGE = "incubator_beam_spark"
 
 
@@ -53,6 +55,11 @@ def log(msg: str) -> None:
     print(f"[perfbench] {msg}", file=sys.stderr, flush=True)
 
 
+def _rounded(times: dict) -> dict:
+    """A pass's gate times, build plus action, for the log."""
+    return {g: round(b + a, 3) for g, (b, a) in times.items()}
+
+
 def clean(work: str) -> None:
     shutil.rmtree(work, ignore_errors=True)
     try:
@@ -71,12 +78,14 @@ def _start(cores: int) -> tuple:
 
 def setup(cores: int, repeats: int = SETUP_REPEATS) -> tuple:
     """Start the session and load the registry, then set up ``repeats``
-    more times in the running JVM: stop the session, drop every package
-    module, and repeat both steps. Returns the session, the gate table
-    and the timings (medians over the repeats)."""
+    more times in the running JVM: probe the host (see host.py), stop
+    the session, drop every package module, and repeat both steps.
+    Returns the session, the gate table and the timings (medians over
+    the repeats; ``setup_s`` scaled to the reference host)."""
     spark, queries, cold, _ = _start(cores)
-    starts, loads = [], []
+    starts, loads, probes = [], [], []
     for _ in range(repeats):
+        probes.extend(host.probe())
         spark.stop()
         for mod in [m for m in sys.modules if m.split(".")[0] == PACKAGE]:
             del sys.modules[mod]
@@ -85,24 +94,12 @@ def setup(cores: int, repeats: int = SETUP_REPEATS) -> tuple:
         loads.append(load)
     timings = {"session.cold_start_s": (cold, "s")}
     if repeats:
-        timings["setup_s"] = (statistics.median(s + lo for s, lo in zip(starts, loads)), "s")
+        setup_s = statistics.median(s + lo for s, lo in zip(starts, loads))
+        log(f"set-up {setup_s:.3f} s on this host, scale {host.scale(probes):.3f}")
+        timings["setup_s"] = (setup_s * host.scale(probes), "s")
         timings["session.start_s"] = (statistics.median(starts), "s")
         timings["registry.load_s"] = (statistics.median(loads), "s")
     return spark, queries, timings
-
-
-def cpu_times() -> list[int]:
-    """The host's cumulative CPU times from /proc/stat: user, nice,
-    system, idle, iowait, irq, softirq, steal."""
-    with open("/proc/stat") as f:
-        return [int(x) for x in f.readline().split()[1:9]]
-
-
-def steal_pct(before: list[int], after: list[int]) -> float:
-    """Share of the host's CPU time between two readings that the
-    hypervisor gave to other guests, in percent."""
-    d = [b - a for a, b in zip(before, after)]
-    return 100.0 * d[7] / max(1, sum(d))
 
 
 def jvm_peak_rss_mb() -> float:
@@ -132,6 +129,17 @@ def shutdown(spark) -> None:
             proc.wait()
 
 
+def _host(cpu: list[int], probes: list[float]) -> dict:
+    """The host over a timed region that started at the /proc/stat
+    reading ``cpu``: its CPU steal and its probed speed (see host.py)."""
+    m = {"host.steal_pct": (host.steal_pct(cpu, host.cpu_times()), "%"), "host.scale": (host.scale(probes), "")}
+    if len(probes) > 1:  # none when the first gate run failed
+        m["host.probe_ms"] = (host.probe_ms(probes), "ms")
+    log(f"CPU steal {m['host.steal_pct'][0]:.1f}%, probe {m.get('host.probe_ms', (0,))[0]:.3f} ms, "
+        f"scale {m['host.scale'][0]:.3f}")
+    return m
+
+
 def run_batch(args, spark, queries, work: str) -> tuple[dict, int, int]:
     import batch
     import inputs
@@ -148,20 +156,23 @@ def run_batch(args, spark, queries, work: str) -> tuple[dict, int, int]:
         warm = runner.run_pass()
         if warm is None:
             break
+        log(f"warm-up pass {_rounded(warm)} s")
     if warm is not None:
         log(f"warm-up passes {time.perf_counter() - t0:.1f} s")
-        cpu = cpu_times()
-        passes = batch.timed_passes(runner, args.seconds)
-        m["host.steal_pct"] = (steal_pct(cpu, cpu_times()), "%")
-        log(f"timed passes {[round(batch.pass_wall(p), 2) for p in passes]} s, "
-            f"CPU steal {m['host.steal_pct'][0]:.1f}%")
+        cpu = host.cpu_times()
+        passes, probes = batch.timed_passes(runner, args.seconds)
+        m.update(_host(cpu, probes))
+        for p in passes:
+            log(f"timed pass {_rounded(p)} s")
         if passes and not runner.failed:
             rows = inputs.input_rows(sf_dir, [queries[g].oracle for g in gates])
-            m.update(batch.end_to_end(passes, rows))
+            m.update(batch.end_to_end(passes, rows, host.scale(probes)))
             if args.trace:
                 tracer = layers.Tracer()
                 m.update(batch.traced_pass(runner, layers.StatusReader(spark), tracer))
                 tracer.write(os.path.join(OUT, f"trace-{args.workload}-seed{args.seed}.json"))
+    if not args.trace:
+        return m, runner.attempted, runner.failed
     bad = selftest.pruned_gates(spark, queries, sf_dir, work)
     return m, runner.attempted + len(selftest.GATES), runner.failed + len(bad)
 
@@ -175,8 +186,8 @@ def run_stream(args, spark, work: str) -> tuple[dict, int, int]:
     files = stream.generate(inputs.inputs_dir(args.seed))
     counts = {"attempted": 0, "failed": 0}
 
-    def one(staged: list, listener=None) -> dict:
-        d = stream.drain(spark, staged, os.path.join(work, f"drain-{counts['attempted']}"), listener)
+    def one(staged: list, listener=None, probes=None) -> dict:
+        d = stream.drain(spark, staged, os.path.join(work, f"drain-{counts['attempted']}"), listener, probes)
         wrong = stream.check_drain(d, staged)
         counts["attempted"] += len(d)
         counts["failed"] += len(wrong)
@@ -188,16 +199,17 @@ def run_stream(args, spark, work: str) -> tuple[dict, int, int]:
     one(files[: stream.WARMUP_FILES])
     log(f"warm-up drain {time.perf_counter() - t0:.1f} s")
     drains: list[dict] = []
+    probes: list[float] = []
     spent = 0.0
-    cpu = cpu_times()
-    while not drains or spent + statistics.median(map(stream.drain_wall, drains)) <= args.seconds:
-        drains.append(one(files))
+    cpu = host.cpu_times()
+    while len(drains) < stream.MIN_DRAINS or spent + statistics.median(map(stream.drain_wall, drains)) <= args.seconds:
+        drains.append(one(files, probes=probes))
         spent += stream.drain_wall(drains[-1])
-        log(f"drain {stream.drain_wall(drains[-1]):.1f} s")
-    m: dict = {"host.steal_pct": (steal_pct(cpu, cpu_times()), "%")}
-    log(f"CPU steal {m['host.steal_pct'][0]:.1f}%")
+        log(f"drain {stream.drain_wall(drains[-1]):.2f} s, triggers (ms) "
+            f"{ {q: [p['durationMs']['triggerExecution'] for p in r['progress']] for q, r in drains[-1].items()} }")
+    m = _host(cpu, probes)
     if not counts["failed"]:
-        m.update(stream.end_to_end(drains))
+        m.update(stream.end_to_end(drains, host.scale(probes)))
         if args.trace:
             tracer = layers.Tracer()
             listener = layers.progress_listener()
@@ -250,8 +262,11 @@ def main(argv=None) -> int:
         clean(work)
         log(f"shutdown {time.perf_counter() - t0:.1f} s")
     m["host.cores"] = (cores, "count")
+    if "wall_s" in m:
+        log(f"wall_s {m['wall_s'][0] / m['host.scale'][0]:.3f} s on this host")
     if "trace.wall_s" in m:
-        m["trace.overhead_s"] = (m["trace.wall_s"][0] - m["wall_s"][0], "s")
+        # both sides in this host's seconds
+        m["trace.overhead_s"] = (m["trace.wall_s"][0] - m["wall_s"][0] / m["host.scale"][0], "s")
 
     correct = failed == 0 and all(x["name"] in m for x in spec["end_to_end"])
     wanted = spec["per_layer"] if args.trace else spec["end_to_end"]

@@ -9,8 +9,8 @@ as the count plan, or leaves out the ``text`` column the kernels read.
 
     python3 perfbench/selftest.py        # exits 1 on failure
 
-The ``batch_kernels`` workload also runs it on every run, outside the
-timed region, and counts a failure as a failed result.
+Every traced ``batch_kernels`` run (``--trace 1``) also runs it, after
+the traced pass, and counts a failure as a failed result.
 """
 
 from __future__ import annotations
