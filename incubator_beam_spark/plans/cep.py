@@ -3,49 +3,59 @@
 Reference surface: Beam SQL's ``BeamMatchRel`` compiles SQL
 ``MATCH_RECOGNIZE`` to an NFA over per-key ordered rows
 (``sdks/java/extensions/sql/.../impl/rel/BeamMatchRel.java`` + the
-``impl/cep/`` operator set and ``impl/nfa/NFA.java``). Spark has no
+``impl/cep/`` operator set and ``impl/nfa/NFA.java``) and runs that one
+model over bounded and unbounded PCollections alike. Spark has no
 native equivalent (SURVEY.md §2.8), so this is one of the few genuinely
-custom operators.
+custom operators — and likewise one kernel run in two forms.
 
-Spark-first design (not a port of the NFA):
-- Symbol predicates are Catalyst ``Column`` expressions, evaluated
-  JVM-side inside whole-stage codegen during the scan — the Python
-  boundary sees one char (plus one bool per symbol) per row.
-- Keys whose rows each satisfy at most ONE symbol run the fast path: the
-  classifier chars form a string and the PATTERN (symbols with ``? * +``
-  quantifiers and ``|`` alternation) compiles to a host regex;
-  ``finditer`` yields greedy, non-overlapping matches == AFTER MATCH
-  SKIP PAST LAST ROW semantics.
-- Keys with AMBIGUOUS rows (a row satisfying several DEFINEs) — or any
-  match-state-dependent callable DEFINE — run the real leftmost-greedy
-  backtracking NFA (``plans/nfa.py``), the general semantics of the
-  reference's ``impl/nfa/NFA.java``, including cross-symbol references
-  like ``B AS B.price < LAST(A.price)``.
-- The per-key run is an ``applyInPandas``: one shuffle on the partition
-  keys, Arrow-batched, state-free. At 100 TB the only scale hazard is a
-  single giant key (all rows of one key sit in one task) — same
-  contract as SQL MATCH_RECOGNIZE's PARTITION BY everywhere.
+The compile step (``_Compiled``) turns the query text into everything
+both forms share: the validated DEFINE/SUBSET/MEASURES surface, the
+AFTER MATCH SKIP policy, the PATTERN both as a host regex over one
+classifier char per symbol and as the leftmost-greedy backtracking NFA
+(``plans/nfa.py``), the classifier ``Column`` (symbol predicates are
+Catalyst expressions evaluated JVM-side inside whole-stage codegen, so
+the Python boundary sees one char plus one bool per symbol per row),
+the output schema, and the output row(s) of one match, whose measures
+come from one evaluator (``_measure_values``) over the match's
+``(row, symbol)`` pairs. Matches are found by one restart loop
+(``_scan_matches``: the SKIP policy over ``NFA.match_at``).
 
-Measures supported: ``("first", SYM, col)``, ``("last", SYM, col)``,
-``("count", SYM)`` (rows), ``("count", SYM, col)`` (non-null values of
-``col`` on SYM's rows — SQL ``COUNT(Sym.col)``), plus ``match_number``
-implicitly; ``SYM=None`` means any row of the match. Under
-``all_rows=True`` an optional 4th element selects ``"running"``
-(default — prefix scan up to the current row) or ``"final"``
-(whole-match value on every row).
+The two forms:
+
+- ``match_recognize`` (bounded input): one ``applyInPandas`` per key
+  after one shuffle on the partition keys. Keys whose rows each satisfy
+  at most one column DEFINE take the C-level ``finditer`` over the
+  classifier string under SKIP PAST LAST ROW, and their ONE ROW
+  measures are computed for every match of the key at once
+  (``_emit_batch``). Ambiguous rows, callable (match-state-dependent)
+  DEFINEs such as ``B AS B.price < LAST(A.price)`` and the other SKIP
+  modes run the restart loop. The only scale hazard is a single giant
+  key, the same contract as SQL PARTITION BY everywhere.
+- ``match_recognize_stream`` (unbounded input): an
+  ``applyInPandasWithState`` buffer per key; the restart loop's
+  stability probe emits only matches no later row can change, and the
+  decided prefix is dropped from state.
+
+Measures: ``first``/``last`` (with an optional logical offset),
+``count`` (rows, or non-null values of a column) and ``sum``/``avg``/
+``min``/``max`` over one symbol, a SUBSET union or every row of the
+match (``SYM=None``), plus ``match_number``. ONE ROW PER MATCH emits
+FINAL values; ALL ROWS PER MATCH emits one row per matched input row
+with RUNNING (default) or FINAL values — see ``match_recognize``.
 """
 
 from __future__ import annotations
 
 import re
 import string
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .nfa import NFA, trail_bindings
 
 _QUANT = r"(?:[?*+]|\{\d+(?:,\d*)?\})\??|"
 _TOKEN = re.compile(
@@ -135,84 +145,6 @@ def _np_bool(series: pd.Series) -> "np.ndarray":
     if out.dtype != bool:
         out = np.fromiter((v is True for v in out), dtype=bool, count=len(out))
     return out
-
-
-_AGG_KINDS = ("sum", "avg", "min", "max")
-
-#: ALL ROWS batch-emitter engagement floor (matched rows per key): the
-#: vectorized path's fixed numpy setup only pays for itself on big keys;
-#: below this the per-match row loop is faster. Module-level so tests
-#: can force either path.
-_ALL_ROWS_BATCH_MIN = 256
-
-
-def _running_measure_values(specs, arrs, pairs):
-    """Per-spec value list for ALL ROWS PER MATCH, one value per matched
-    row. RUNNING (default) = prefix scan up to the current row; FINAL =
-    the whole-match value everywhere (== the running value at the last
-    row, for every supported measure kind). ``pairs`` is the match's
-    ordered ``(row_index, symbol_name)`` attribution; ``arrs`` maps
-    column name -> indexable values. Shared by the batch kernel and the
-    streaming kernel (r8 — decided streaming matches are final, so
-    per-row emission is sound)."""
-    per_spec = []
-    for spec in specs:
-        kind, sym, col, off, mode = spec
-        mode = mode or "running"
-        vals, cnt, cur, seen, acc = [], 0, None, False, 0
-        hits: list = []  # hit values, kept only for offset nav
-        for idx, sname in pairs:
-            hit = sym is None or (
-                sname == sym if isinstance(sym, str) else sname in sym
-            )
-            if kind == "count":
-                if hit and (col is None or not pd.isna(arrs[col][idx])):
-                    cnt += 1
-                vals.append(cnt)
-            elif kind == "first":
-                if off:
-                    if hit and len(hits) <= off:
-                        hits.append(arrs[col][idx])
-                    vals.append(hits[off] if len(hits) > off else None)
-                else:
-                    if hit and not seen:
-                        cur, seen = arrs[col][idx], True
-                    vals.append(cur)
-            elif kind == "last":
-                if off:
-                    if hit:
-                        hits.append(arrs[col][idx])
-                    vals.append(hits[-1 - off] if len(hits) > off else None)
-                else:
-                    if hit:
-                        cur = arrs[col][idx]
-                    vals.append(cur)
-            elif kind in _AGG_KINDS:
-                v = arrs[col][idx]
-                if hit and not pd.isna(v):
-                    cnt += 1
-                    if kind in ("sum", "avg"):
-                        acc += v
-                    elif cur is None:
-                        cur = v
-                    elif kind == "min":
-                        cur = min(cur, v)
-                    else:
-                        cur = max(cur, v)
-                if not cnt:
-                    vals.append(None)
-                elif kind == "sum":
-                    vals.append(acc)
-                elif kind == "avg":
-                    vals.append(float(acc) / cnt)
-                else:
-                    vals.append(cur)
-            else:
-                raise ValueError(f"unknown measure kind {kind!r}")
-        if mode == "final" and vals:
-            vals = [vals[-1]] * len(vals)
-        per_spec.append(vals)
-    return per_spec
 
 
 def _split_last_atom(pat: str) -> tuple[str, str, str]:
@@ -334,7 +266,7 @@ def _ends_extendable(pat: str) -> bool:
     the last atom is, OR the last atom can match empty and the prefix's
     end is. Top-level alternation ('A+|B') is split first: the pattern
     end is extendable if ANY alternative's end is (ADVICE r5 — a match
-    via the A+ branch would otherwise be held by ``_stable_scan`` until
+    via the A+ branch would otherwise be held by ``_scan_matches`` until
     a later symbol arrives, the liveness hazard this guard rejects).
     """
     if not pat:
@@ -380,6 +312,435 @@ def _compile_pattern(pattern: str, sym_chars: dict[str, str]) -> re.Pattern:
     return re.compile("".join(out))
 
 
+class _Compiled:
+    """The compile step both kernels share: everything derived from the
+    query text alone. Validates DEFINE, SUBSET, MEASURES and the AFTER
+    MATCH SKIP clause, resolves SUBSET names in measures to frozensets
+    of member symbols, and compiles the PATTERN to the classifier-char
+    regex and the NFA. Holds no ``Column``, so the kernels' worker
+    functions can pickle it."""
+
+    def __init__(
+        self,
+        define: dict,
+        pattern: str,
+        measures: dict[str, tuple],
+        subsets: "dict[str, list[str]] | None",
+        after_match: str,
+        all_rows: bool,
+        with_classifier: bool,
+    ):
+        if not define:
+            raise ValueError("define must not be empty")
+        subsets = subsets or {}
+        for uname, members in subsets.items():
+            if uname in define:
+                raise ValueError(
+                    f"SUBSET name {uname!r} collides with a DEFINE symbol"
+                )
+            bad = [m for m in members if m not in define]
+            if bad:
+                raise ValueError(f"SUBSET {uname!r} members {bad} not in define")
+        specs = {
+            name: _norm_spec(
+                name,
+                (
+                    spec[0],
+                    frozenset(subsets[spec[1]])
+                    if isinstance(spec[1], str) and spec[1] in subsets
+                    else spec[1],
+                    *spec[2:],
+                ),
+            )
+            for name, spec in measures.items()
+        }
+        for name, spec in specs.items():
+            if isinstance(spec[1], str) and spec[1] not in define:
+                raise ValueError(
+                    f"measure {name!r} references symbol {spec[1]!r} — not a "
+                    "DEFINE symbol or SUBSET name"
+                )
+        if with_classifier and all_rows:
+            raise ValueError(
+                "with_classifier applies to ONE ROW PER MATCH only "
+                "(ALL ROWS already emits a per-row classifier column)"
+            )
+        skip_sym: str | None = None
+        skip_first = False
+        m_skip = re.match(r"to (first|last) (\w+)$", after_match)
+        if m_skip:
+            skip_first = m_skip.group(1) == "first"
+            skip_sym = m_skip.group(2)
+            if skip_sym not in define:
+                raise ValueError(
+                    f"AFTER MATCH SKIP target {skip_sym!r} not in define"
+                )
+        elif after_match not in ("past last row", "to next row"):
+            raise ValueError(f"unsupported AFTER MATCH SKIP mode {after_match!r}")
+        self.skip = (after_match, skip_sym, skip_first)
+        self.sym_chars = _sym_chars(define)
+        self.name_by_char = {c: n for n, c in self.sym_chars.items()}
+        self.rx = _compile_pattern(pattern, self.sym_chars)
+        self.nfa = NFA(pattern)
+        self.fn_defines = {
+            n: d for n, d in define.items() if not isinstance(d, Column)
+        }
+        self.names = list(specs)
+        self.specs = list(specs.values())
+        self.measure_cols = sorted({s[2] for s in self.specs if s[2]})
+        self.all_rows = all_rows
+        self.with_classifier = with_classifier
+
+    def classifier(self, define: dict) -> Column:
+        """Per-row classifier char: the FIRST column DEFINE that holds,
+        else '.'. It names the row's symbol only where the column
+        DEFINEs are mutually exclusive in the data; rows of callable
+        symbols carry '.'."""
+        out: Column = F.lit(".")
+        for name in reversed([n for n, d in define.items() if isinstance(d, Column)]):
+            out = F.when(define[name], F.lit(self.sym_chars[name])).otherwise(out)
+        return out
+
+    def out_schema(
+        self, schema: T.StructType, partition_by: list[str], order_cols: list[str]
+    ) -> T.StructType:
+        """Partition columns and ``match_number``; under ALL ROWS the
+        per-row ``classifier`` and the order columns, under ONE ROW the
+        ``classifier`` only with ``with_classifier``; then the measures
+        (COUNT long, AVG double, the others the column's type)."""
+        fields = [schema[c] for c in partition_by]
+        fields.append(T.StructField("match_number", T.LongType()))
+        if self.all_rows or self.with_classifier:
+            fields.append(T.StructField("classifier", T.StringType()))
+        if self.all_rows:
+            fields += [schema[c] for c in order_cols]
+        for name, (kind, _sym, col, _off, _mode) in zip(self.names, self.specs):
+            if kind == "count":
+                dtype = T.LongType()
+            elif kind == "avg":
+                dtype = T.DoubleType()
+            else:
+                dtype = schema[col].dataType
+            fields.append(T.StructField(name, dtype))
+        return T.StructType(fields)
+
+    def match_rows(self, key, match_no: int, pairs, arrs, order_cols) -> list:
+        """The output rows of one match, in ``out_schema`` order: one row
+        under ONE ROW PER MATCH (CLASSIFIER() = the last matched row's
+        symbol), one per matched input row under ALL ROWS."""
+        vals = _measure_values(self.specs, arrs, pairs, self.all_rows)
+        if self.all_rows:
+            return [
+                [*key, match_no, s, *(arrs[c][i] for c in order_cols)]
+                + [v[p] for v in vals]
+                for p, (i, s) in enumerate(pairs)
+            ]
+        if self.with_classifier:
+            return [[*key, match_no, pairs[-1][1], *vals]]
+        return [[*key, match_no, *vals]]
+
+
+def _measure_values(specs, arrs, pairs, all_rows: bool = False) -> list:
+    """The measures of one match — the single evaluator behind both
+    kernels and every path but the vectorized ``_emit_batch``.
+
+    ``pairs`` is the match's ``(row_index, symbol_name)`` attribution in
+    row order; ``arrs`` maps column name -> indexable values. ONE ROW
+    PER MATCH returns one FINAL value per spec. ALL ROWS PER MATCH
+    returns per spec one value per matched row: the RUNNING value up to
+    that row (the default mode) or the FINAL value on every row.
+    FIRST/LAST index the symbol's rows whatever their value (NULL when
+    it maps fewer than offset+1 rows); COUNT(col) and the aggregates
+    skip NULLs; an aggregate over no value is NULL; AVG divides the sum
+    as float."""
+    out = []
+    for kind, sym, col, off, mode in specs:
+        members = None if sym is None else ({sym} if isinstance(sym, str) else sym)
+        a = arrs[col] if col is not None else None
+        nav = kind in ("first", "last")
+        hits: list = []  # FIRST/LAST: the values of the symbol's rows
+        cnt, acc, cur = 0, 0, None
+
+        def value():
+            if kind == "count":
+                return cnt
+            if nav:
+                if len(hits) <= off:
+                    return None
+                return hits[off] if kind == "first" else hits[-1 - off]
+            if not cnt:
+                return None
+            if kind == "sum":
+                return acc
+            if kind == "avg":
+                return float(acc) / cnt
+            return cur
+
+        running = all_rows and mode != "final"
+        vals = []
+        for idx, s in pairs:
+            if members is None or s in members:
+                if nav:
+                    if kind == "last" or len(hits) <= off:
+                        hits.append(a[idx])
+                elif a is None:
+                    cnt += 1
+                elif not pd.isna(a[idx]):
+                    cnt += 1
+                    v = a[idx]
+                    if kind in ("sum", "avg"):
+                        acc += v
+                    elif cur is None:
+                        cur = v
+                    elif kind == "min":
+                        cur = min(cur, v)
+                    elif kind == "max":
+                        cur = max(cur, v)
+            if running:
+                vals.append(value())
+        if running:
+            out.append(vals)
+        elif all_rows:
+            out.append([value()] * len(pairs))
+        else:
+            out.append(value())
+    return out
+
+
+def _batch_aggs_exact(specs, arrs) -> bool:
+    """``_emit_batch`` may only vectorize SUM/AVG when the column is
+    integral (prefix/segment arithmetic is exact there; float summation
+    order would change the last-bit rounding vs ``_measure_values``),
+    and MIN/MAX on natively comparable numpy dtypes. Anything else keeps
+    the per-match evaluator."""
+    for kind, _sym, col, _off, _mode in specs:
+        if kind in ("sum", "avg"):
+            if arrs[col].dtype.kind not in "iu":
+                return False
+        elif kind in ("min", "max"):
+            if arrs[col].dtype.kind not in "iufM":
+                return False
+    return True
+
+
+def _emit_batch(cp: _Compiled, key_vals, los, his, arrs, syms: str) -> list:
+    """Vectorized ONE ROW PER MATCH emission for the classifier-string
+    path: ``_measure_values`` costs ~17 us per match in Python, so this
+    computes every measure for ALL matches of the key at once —
+    per-symbol membership masks + padded prefix counts turn
+    FIRST/LAST/COUNT into O(1) array lookups per match, and
+    SUM/MIN/MAX into ``reduceat`` segments over the symbol's occurrence
+    list. Match ``j`` spans rows ``[los[j], his[j])``. Value semantics
+    equal ``_measure_values`` wherever ``_batch_aggs_exact`` holds.
+    Returns the output columns (measures as object arrays, datetime
+    MIN/MAX as datetime64 with NaT)."""
+    m = los.shape[0]
+    # utf-32-le = one uint32 per char, valid for A-Z and the
+    # private-use classifier chars beyond 26 symbols alike
+    codes = np.frombuffer(syms.encode("utf-32-le"), dtype=np.uint32)
+    mask_cache: dict = {}
+    cum_cache: dict = {}
+
+    def _mask(symk):
+        mk = mask_cache.get(symk)
+        if mk is None:
+            if isinstance(symk, str):
+                mk = codes == ord(cp.sym_chars[symk])
+            else:
+                mk = np.zeros(codes.shape[0], dtype=bool)
+                for s in symk:
+                    mk |= codes == ord(cp.sym_chars[s])
+            mask_cache[symk] = mk
+        return mk
+
+    def _cum(key, mk):
+        c = cum_cache.get(key)
+        if c is None:
+            c = np.concatenate(([0], np.cumsum(mk, dtype=np.int64)))
+            cum_cache[key] = c
+        return c
+
+    def _null_col(dtype):
+        """All-null output column. Datetime sources stay NATIVE
+        datetime64 + NaT: numpy silently converts datetime64 elements
+        assigned into an object array to raw Python ints (epoch nanos),
+        which the Spark serializer would then read as microseconds."""
+        if dtype.kind == "M":
+            return np.full(m, np.datetime64("NaT"), dtype=dtype)
+        out = np.empty(m, dtype=object)
+        out[:] = None
+        return out
+
+    def _pick(a, idx_arr, valid):
+        """a[idx] where valid, None/NaT elsewhere."""
+        out = _null_col(a.dtype)
+        if valid.any():
+            safe = np.where(valid, idx_arr, 0)
+            pv = a[safe]
+            out[valid] = pv[valid]
+        return out
+
+    cols = [np.full(m, kv, dtype=object) for kv in key_vals]
+    cols.append(np.arange(1, m + 1, dtype=np.int64))
+    if cp.with_classifier:
+        last_codes = codes[his - 1]
+        cl = np.empty(m, dtype=object)
+        for u in np.unique(last_codes):
+            cl[last_codes == u] = cp.name_by_char[chr(u)]
+        cols.append(cl)
+    for kind, symk, col, off, _mode in cp.specs:
+        if kind == "count":
+            if col is not None:
+                mk = ~pd.isna(arrs[col])
+                if symk is not None:
+                    mk = mk & _mask(symk)
+                c = _cum((symk, col, "nn"), mk)
+                cols.append(c[his] - c[los])
+            elif symk is None:
+                cols.append(his - los)
+            else:
+                c = _cum(symk, _mask(symk))
+                cols.append(c[his] - c[los])
+            continue
+        a = arrs[col]
+        if kind in ("first", "last"):
+            if symk is None:
+                valid = (his - los) > off
+                sel = (los + off) if kind == "first" else (his - 1 - off)
+                cols.append(_pick(a, sel, valid))
+            else:
+                mk = _mask(symk)
+                c = _cum(symk, mk)
+                clo, chi = c[los], c[his]
+                if kind == "first":
+                    sel = clo + off
+                    valid = sel < chi
+                else:
+                    sel = chi - 1 - off
+                    valid = sel >= clo
+                pos = np.flatnonzero(mk)
+                if pos.shape[0] == 0:
+                    cols.append(_null_col(a.dtype))
+                else:
+                    cols.append(_pick(a, pos[np.where(valid, sel, 0)], valid))
+            continue
+        # sum / avg / min / max — NULL-skipping segment reductions
+        mk = ~pd.isna(a)
+        if symk is not None:
+            mk = mk & _mask(symk)
+        c = _cum((symk, col, "nn"), mk)
+        clo, chi = c[los], c[his]
+        cnt = chi - clo
+        nonempty = cnt > 0
+        vpos = np.flatnonzero(mk)
+        out = _null_col(a.dtype if kind in ("min", "max") else np.dtype("O"))
+        if vpos.shape[0] and nonempty.any():
+            av = a[vpos]
+            # sentinel element keeps every reduceat index < len;
+            # segments never reach it (they end at chi <= len(av))
+            av2 = np.concatenate((av, av[:1]))
+            idx = np.empty(2 * m, dtype=np.int64)
+            idx[0::2] = clo
+            idx[1::2] = chi
+            op = {
+                "sum": np.add,
+                "avg": np.add,
+                "min": np.minimum,
+                "max": np.maximum,
+            }[kind]
+            r = op.reduceat(av2, idx)[0::2]
+            if kind == "avg":
+                vals_f = r.astype(np.float64) / np.maximum(cnt, 1)
+                out[nonempty] = vals_f[nonempty]
+            else:
+                out[nonempty] = r[nonempty]
+        cols.append(out)
+    return cols
+
+
+def _scan_matches(
+    nfa,
+    n: int,
+    can,
+    after_match: str = "past last row",
+    skip_sym: "str | None" = None,
+    skip_first: bool = False,
+    start: int = 0,
+    start_mask=None,
+    stable: bool = True,
+) -> tuple[list[tuple[int, int, list]], int]:
+    """The AFTER MATCH SKIP restart loop of both kernels: leftmost-greedy
+    ``NFA.match_at`` matches over rows ``start..n-1``. Returns (matches
+    as ``(lo, hi, assignment)``, boundary); the assignment is the NFA's
+    ``[(row, sym), ...]``, which carries symbol attribution for rows
+    classified by CALLABLE defines (they have no classifier char).
+
+    ``after_match`` picks the restart policy: ``past last row`` restarts
+    at the match end (non-overlapping); ``to next row`` one past the
+    match START (overlapping); ``to first/last <sym>`` at that row of
+    the match (``skip_sym`` + ``skip_first``), raising when the symbol
+    is absent from the match or the target is its first row (the
+    standard's infinite-loop protections). A zero-width match is retried
+    non-empty at the same position, as the host regex engine does.
+
+    ``stable=True`` (the streaming kernel): rows[:n] are a PARTIAL
+    stream prefix, so the scan stops at the first position whose
+    outcome could still change with more input (some branch at or above
+    the winning priority probed past the buffer end). Everything before
+    the returned boundary is final — emit the matches, drop the prefix;
+    rows from the boundary on must stay buffered. This holds under every
+    skip mode: the restart position is a deterministic function of a
+    DECIDED match and every emitted match starts strictly before the
+    boundary, so dropping ``rows[:boundary]`` can never re-emit a match,
+    whatever the overlap. ``stable=False`` (the batch kernel): rows[:n]
+    are the whole input; the scan runs to the end and returns ``n``.
+
+    ``start`` begins the scan mid-buffer: the streaming kernel retains
+    already-consumed HISTORY rows at the buffer front so PREV() physical
+    navigation can see across the consumption boundary — those rows must
+    never be rescanned (they would re-emit). ``start_mask`` (bool per
+    row) skips positions where no first-set symbol holds — pure pruning,
+    valid only for non-nullable patterns (see ``NFA.first_symbols``)."""
+    matches: list[tuple[int, int, list]] = []
+    probe = None
+    i = start
+    while i < n:
+        if start_mask is not None and not start_mask[i]:
+            i += 1
+            continue
+        if stable:
+            probe = [False]
+        m = nfa.match_at(i, n, can, probe=probe)
+        if m is not None and m[0] == i:
+            # zero-width: retry non-empty at the same position; the
+            # retry's stability matters too
+            m = nfa.match_at(i, n, can, require_consume=True, probe=probe)
+        if probe is not None and probe[0]:
+            return matches, i
+        if m is None or m[0] == i:
+            i += 1
+            continue
+        matches.append((i, m[0], m[1]))
+        if after_match == "past last row":
+            i = m[0]
+        elif skip_sym is None:  # to next row
+            i += 1
+        else:
+            ps = [idx for idx, s in m[1] if s == skip_sym]
+            if not ps:
+                raise ValueError(
+                    f"AFTER MATCH SKIP {after_match}: {skip_sym} absent from match"
+                )
+            t = ps[0] if skip_first else ps[-1]
+            if t == i:
+                raise ValueError(
+                    f"AFTER MATCH SKIP {after_match} would "
+                    "re-match the same starting row"
+                )
+            i = t
+    return matches, n
+
+
 def match_recognize(
     df: DataFrame,
     partition_by: list[str],
@@ -409,12 +770,14 @@ def match_recognize(
     ``pattern`` is a regex over symbols (quantifiers ``? * +``,
     alternation ``|``, grouping); ``measures`` defines the output.
 
-    Execution: rows whose DEFINEs are mutually exclusive in the data run
-    through a host-regex over a classifier char string (C-level, the
-    round-2 kernel). Keys where a row satisfies >1 symbol — or any
-    callable define — run the real leftmost-greedy backtracking NFA
-    (``plans/nfa.py``), matching Calcite's NFA preference order. Both
-    paths share the one-shuffle ``applyInPandas`` shape.
+    Execution: under SKIP PAST LAST ROW, keys whose rows each satisfy at
+    most one column DEFINE run a host regex over the classifier char
+    string (C-level). Keys where a row satisfies >1 symbol, any callable
+    define and the other SKIP modes run the leftmost-greedy
+    backtracking NFA (``plans/nfa.py``, Calcite's NFA preference order)
+    through the restart loop the streaming kernel shares
+    (``_scan_matches``). Both paths share the one-shuffle
+    ``applyInPandas`` shape and the compile step (``_Compiled``).
 
     ``after_match`` is the SQL-standard AFTER MATCH SKIP clause:
     ``"past last row"`` (default, non-overlapping), ``"to next row"``
@@ -454,73 +817,13 @@ def match_recognize(
     row's symbol — the SQL standard's CLASSIFIER() under ONE ROW PER
     MATCH.
     """
-    if not define:
-        raise ValueError("define must not be empty")
-    subsets = subsets or {}
-    for uname, members in subsets.items():
-        if uname in define:
-            raise ValueError(f"SUBSET name {uname!r} collides with a DEFINE symbol")
-        bad = [m for m in members if m not in define]
-        if bad:
-            raise ValueError(f"SUBSET {uname!r} members {bad} not in define")
-    # resolve subset names in measure specs to frozensets of member symbols
-    measures = {
-        name: _norm_spec(
-            name,
-            (
-                spec[0],
-                frozenset(subsets[spec[1]])
-                if isinstance(spec[1], str) and spec[1] in subsets
-                else spec[1],
-                *spec[2:],
-            ),
-        )
-        for name, spec in measures.items()
-    }
-    for name, spec in measures.items():
-        if isinstance(spec[1], str) and spec[1] not in define:
-            raise ValueError(
-                f"measure {name!r} references symbol {spec[1]!r} — not a "
-                "DEFINE symbol or SUBSET name"
-            )
-    if with_classifier and all_rows:
-        raise ValueError(
-            "with_classifier applies to ONE ROW PER MATCH only "
-            "(ALL ROWS already emits a per-row classifier column)"
-        )
-    skip_sym: str | None = None
-    skip_first = False
-    m_skip = re.match(r"to (first|last) (\w+)$", after_match)
-    if m_skip:
-        skip_first = m_skip.group(1) == "first"
-        skip_sym = m_skip.group(2)
-        if skip_sym not in define:
-            raise ValueError(f"AFTER MATCH SKIP target {skip_sym!r} not in define")
-    elif after_match not in ("past last row", "to next row"):
-        raise ValueError(f"unsupported AFTER MATCH SKIP mode {after_match!r}")
-    from .nfa import NFA, trail_bindings
-
-    sym_chars = _sym_chars(define)
-    rx = _compile_pattern(pattern, sym_chars)
-    nfa = NFA(pattern)
-    nfa_first, nfa_nullable = nfa.first_symbols()
-    unknown = nfa.symbols - set(define)
-    if unknown:
-        raise ValueError(f"pattern symbols {sorted(unknown)} not in define")
-
+    cp = _Compiled(
+        define, pattern, measures, subsets, after_match, all_rows, with_classifier
+    )
+    fn_defines = cp.fn_defines
     col_defines = {n: d for n, d in define.items() if isinstance(d, Column)}
-    fn_defines = {n: d for n, d in define.items() if not isinstance(d, Column)}
-    force_nfa = after_match != "past last row" and _is_nullable(rx.pattern)
+    nfa_first, nfa_nullable = cp.nfa.first_symbols()
 
-    # classifier char: first matching COLUMN define, else '.' (used only on
-    # the mutually-exclusive fast path, where first-match == unique match)
-    classifier: Column = F.lit(".")
-    for name in reversed(list(col_defines)):
-        classifier = F.when(col_defines[name], F.lit(sym_chars[name])).otherwise(
-            classifier
-        )
-
-    measure_cols = sorted({spec[2] for spec in measures.values() if spec[2]})
     # shuffle width: keep only the columns the kernel can prove it needs.
     # Compiled DEFINE conditions (plans/cepdefine.py) declare their
     # column set as fn.columns; an OPAQUE user callable may inspect any
@@ -535,511 +838,21 @@ def match_recognize(
                 f"DEFINE conditions reference unknown columns {missing}"
             )
         base_cols = list(
-            dict.fromkeys([*partition_by, *order_by, *measure_cols, *pred_cols])
+            dict.fromkeys([*partition_by, *order_by, *cp.measure_cols, *pred_cols])
         )
     elif fn_defines:
         base_cols = list(df.columns)
     else:
-        base_cols = list(dict.fromkeys([*partition_by, *order_by, *measure_cols]))
+        base_cols = list(dict.fromkeys([*partition_by, *order_by, *cp.measure_cols]))
     bool_cols = {n: f"__d_{i}" for i, n in enumerate(col_defines)}
     proj = df.select(
         *base_cols,
-        classifier.alias("__sym"),
+        cp.classifier(define).alias("__sym"),
         *[col_defines[n].cast("boolean").alias(c) for n, c in bool_cols.items()],
     )
-
-    part_fields = [proj.schema[c] for c in partition_by]
-
-    def _measure_field(name: str, spec: tuple) -> T.StructField:
-        if spec[0] == "count":
-            return T.StructField(name, T.LongType())
-        if spec[0] == "avg":
-            return T.StructField(name, T.DoubleType())
-        return T.StructField(name, proj.schema[spec[2]].dataType)
-
-    if all_rows:
-        out_schema = T.StructType(
-            [*part_fields]
-            + [
-                T.StructField("match_number", T.LongType()),
-                T.StructField("classifier", T.StringType()),
-            ]
-            + [proj.schema[c] for c in order_by]
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
-    else:
-        out_schema = T.StructType(
-            [*part_fields]
-            + [T.StructField("match_number", T.LongType())]
-            + (
-                [T.StructField("classifier", T.StringType())]
-                if with_classifier
-                else []
-            )
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
+    out_schema = cp.out_schema(proj.schema, partition_by, order_by)
     out_cols = [f.name for f in out_schema.fields]
-
-    specs = list(measures.values())
-    data_cols = [c for c in base_cols]
-    name_by_char = {c: n for n, c in sym_chars.items()}
-
-    def _span_idxs(sym, lo, hi, syms, pos_by_sym, assignment):
-        """Ordered row indices of the match belonging to ``sym`` (a
-        symbol name, a frozenset — SUBSET union — or None = every match
-        row). Generic path for subset/aggregate measures; plain-symbol
-        first/last/count keep their C-level string scans."""
-        if syms is not None:
-            if sym is None:
-                return range(lo, hi)
-            chars = {
-                sym_chars[s] for s in ((sym,) if isinstance(sym, str) else sym)
-            }
-            return [i for i in range(lo, hi) if syms[i] in chars]
-        if sym is None:
-            return sorted(i for i, _ in assignment)
-        names = (sym,) if isinstance(sym, str) else sym
-        out: list[int] = []
-        for s in names:
-            out.extend(pos_by_sym.get(s, ()))
-        out.sort()
-        return out
-
-    _AGGS = ("sum", "avg", "min", "max")
-
-    def _emit(key_vals, match_no, lo, hi, arrs, syms=None, assignment=None):
-        """One output row from either kernel. ``syms`` drives the C-level
-        string measures (fast path); ``assignment`` the NFA positions."""
-        if assignment is not None:
-            pos_by_sym: dict[str, list[int]] = {}
-            for idx, s in assignment:
-                pos_by_sym.setdefault(s, []).append(idx)
-        else:
-            pos_by_sym = None
-        vals = []
-        if with_classifier:
-            # CLASSIFIER() under ONE ROW PER MATCH: the LAST row's symbol
-            vals.append(
-                assignment[-1][1] if assignment else name_by_char[syms[hi - 1]]
-            )
-        for spec in specs:
-            kind, sym, col, off, _mode = spec
-            if kind in _AGGS or isinstance(sym, frozenset) or off:
-                idxs = _span_idxs(sym, lo, hi, syms, pos_by_sym, assignment)
-                if kind == "count":
-                    if col is None:
-                        vals.append(len(idxs))
-                    else:
-                        a = arrs[col]
-                        vals.append(sum(1 for i in idxs if not pd.isna(a[i])))
-                    continue
-                if kind in ("first", "last"):
-                    idxs = list(idxs)
-                    if len(idxs) <= off:
-                        i = -1
-                    else:
-                        i = idxs[off] if kind == "first" else idxs[-1 - off]
-                    vals.append(arrs[col][i] if i >= 0 else None)
-                    continue
-                a = arrs[col]
-                xs = [a[i] for i in idxs if not pd.isna(a[i])]
-                if not xs:
-                    vals.append(None)
-                elif kind == "sum":
-                    vals.append(sum(xs))
-                elif kind == "avg":
-                    vals.append(float(sum(xs)) / len(xs))
-                elif kind == "min":
-                    vals.append(min(xs))
-                else:
-                    vals.append(max(xs))
-                continue
-            if kind == "count":
-                if col is not None:
-                    # COUNT(Sym.col): non-null col values among Sym's rows
-                    if syms is not None:
-                        ch = sym_chars[sym] if sym is not None else None
-                        idxs = (
-                            i
-                            for i in range(lo, hi)
-                            if ch is None or syms[i] == ch
-                        )
-                    else:
-                        idxs = (
-                            pos_by_sym.get(sym, ())
-                            if sym is not None
-                            else (i for i, _ in assignment)
-                        )
-                    a = arrs[col]
-                    vals.append(sum(1 for i in idxs if not pd.isna(a[i])))
-                elif sym is None:
-                    vals.append(hi - lo)
-                elif syms is not None:
-                    vals.append(syms.count(sym_chars[sym], lo, hi))
-                else:
-                    vals.append(len(pos_by_sym.get(sym, ())))
-                continue
-            if kind == "first":
-                if sym is None:
-                    i = lo
-                elif syms is not None:
-                    i = syms.find(sym_chars[sym], lo, hi)
-                else:
-                    p = pos_by_sym.get(sym)
-                    i = p[0] if p else -1
-            elif kind == "last":
-                if sym is None:
-                    i = hi - 1
-                elif syms is not None:
-                    i = syms.rfind(sym_chars[sym], lo, hi)
-                else:
-                    p = pos_by_sym.get(sym)
-                    i = p[-1] if p else -1
-            else:
-                raise ValueError(f"unknown measure kind {kind!r}")
-            vals.append(arrs[col][i] if i >= 0 else None)
-        return [*key_vals, match_no, *vals]
-
-    def _batch_aggs_exact(arrs) -> bool:
-        """The batch emitter may only vectorize SUM/AVG when the column
-        is integral (prefix/segment arithmetic is exact there; float
-        summation order would change the last-bit rounding vs the
-        per-match ``sum()``), and MIN/MAX on natively comparable numpy
-        dtypes. Anything else keeps the per-match ``_emit`` loop."""
-        for kind, _sym, col, _off, _mode in specs:
-            if kind in ("sum", "avg"):
-                if arrs[col].dtype.kind not in "iu":
-                    return False
-            elif kind in ("min", "max"):
-                if arrs[col].dtype.kind not in "iufM":
-                    return False
-        return True
-
-    def _emit_batch(key_vals, los, his, arrs, syms):
-        """Vectorized ONE ROW PER MATCH emission for the fast path
-        (VERDICT r11 item 5): ``_emit`` cost ~17 us/match in Python
-        measure scans (r11 cProfile: ~0.7 s single-threaded on
-        cep_measures_complete). This computes every measure for ALL
-        matches of the key at once — per-symbol membership masks +
-        padded prefix counts turn FIRST/LAST/COUNT into O(1) array
-        lookups per match, and SUM/MIN/MAX into ``reduceat`` segments
-        over the symbol's occurrence list. Value semantics are
-        bit-identical to ``_emit``: FIRST/LAST index rows regardless of
-        NULLs, COUNT(col)/aggregates skip NULLs, empty aggregate spans
-        yield None, AVG divides the exact integral sum as float.
-        Returns the output columns (measures as object arrays — the
-        same cell values ``_emit`` rows would produce)."""
-        m = los.shape[0]
-        # utf-32-le = one uint32 per char, valid for A-Z and the
-        # private-use classifier chars beyond 26 symbols alike
-        codes = np.frombuffer(syms.encode("utf-32-le"), dtype=np.uint32)
-        mask_cache: dict = {}
-        cum_cache: dict = {}
-
-        def _mask(symk):
-            mk = mask_cache.get(symk)
-            if mk is None:
-                if isinstance(symk, str):
-                    mk = codes == ord(sym_chars[symk])
-                else:
-                    mk = np.zeros(codes.shape[0], dtype=bool)
-                    for s in symk:
-                        mk |= codes == ord(sym_chars[s])
-                mask_cache[symk] = mk
-            return mk
-
-        def _cum(key, mk):
-            c = cum_cache.get(key)
-            if c is None:
-                c = np.concatenate(
-                    ([0], np.cumsum(mk, dtype=np.int64))
-                )
-                cum_cache[key] = c
-            return c
-
-        def _null_col(dtype):
-            """All-null output column. Datetime sources stay NATIVE
-            datetime64 + NaT: numpy silently converts datetime64
-            elements assigned into an object array to raw Python ints
-            (epoch nanos), which the Spark serializer would then read
-            as microseconds."""
-            if dtype.kind == "M":
-                return np.full(m, np.datetime64("NaT"), dtype=dtype)
-            out = np.empty(m, dtype=object)
-            out[:] = None
-            return out
-
-        def _pick(a, idx_arr, valid):
-            """a[idx] where valid, None/NaT elsewhere."""
-            out = _null_col(a.dtype)
-            if valid.any():
-                safe = np.where(valid, idx_arr, 0)
-                pv = a[safe]
-                out[valid] = pv[valid]
-            return out
-
-        cols = [np.full(m, kv, dtype=object) for kv in key_vals]
-        cols.append(np.arange(1, m + 1, dtype=np.int64))
-        if with_classifier:
-            last_codes = codes[his - 1]
-            cl = np.empty(m, dtype=object)
-            for u in np.unique(last_codes):
-                cl[last_codes == u] = name_by_char[chr(u)]
-            cols.append(cl)
-        for spec in specs:
-            kind, symk, col, off, _mode = spec
-            if kind == "count":
-                if col is not None:
-                    mk = ~pd.isna(arrs[col])
-                    if symk is not None:
-                        mk = mk & _mask(symk)
-                    c = _cum((symk, col, "nn"), mk)
-                    cols.append(c[his] - c[los])
-                elif symk is None:
-                    cols.append(his - los)
-                else:
-                    c = _cum(symk, _mask(symk))
-                    cols.append(c[his] - c[los])
-                continue
-            a = arrs[col]
-            if kind in ("first", "last"):
-                if symk is None:
-                    valid = (his - los) > off
-                    sel = (los + off) if kind == "first" else (his - 1 - off)
-                    cols.append(_pick(a, sel, valid))
-                else:
-                    mk = _mask(symk)
-                    c = _cum(symk, mk)
-                    clo, chi = c[los], c[his]
-                    if kind == "first":
-                        sel = clo + off
-                        valid = sel < chi
-                    else:
-                        sel = chi - 1 - off
-                        valid = sel >= clo
-                    pos = np.flatnonzero(mk)
-                    if pos.shape[0] == 0:
-                        cols.append(_null_col(a.dtype))
-                    else:
-                        cols.append(
-                            _pick(a, pos[np.where(valid, sel, 0)], valid)
-                        )
-                continue
-            # sum / avg / min / max — NULL-skipping segment reductions
-            mk = ~pd.isna(a)
-            if symk is not None:
-                mk = mk & _mask(symk)
-            c = _cum((symk, col, "nn"), mk)
-            clo, chi = c[los], c[his]
-            cnt = chi - clo
-            nonempty = cnt > 0
-            vpos = np.flatnonzero(mk)
-            out = _null_col(a.dtype if kind in ("min", "max") else np.dtype("O"))
-            if vpos.shape[0] and nonempty.any():
-                av = a[vpos]
-                # sentinel element keeps every reduceat index < len;
-                # segments never reach it (they end at chi <= len(av))
-                av2 = np.concatenate((av, av[:1]))
-                idx = np.empty(2 * m, dtype=np.int64)
-                idx[0::2] = clo
-                idx[1::2] = chi
-                op = {
-                    "sum": np.add,
-                    "avg": np.add,
-                    "min": np.minimum,
-                    "max": np.maximum,
-                }[kind]
-                r = op.reduceat(av2, idx)[0::2]
-                if kind == "avg":
-                    vals_f = r.astype(np.float64) / np.maximum(cnt, 1)
-                    out[nonempty] = vals_f[nonempty]
-                else:
-                    out[nonempty] = r[nonempty]
-            cols.append(out)
-        return cols
-
-    def _all_rows_batch_exact(arrs) -> bool:
-        """ALL ROWS vectorization guard (VERDICT r11 item 5, second
-        half): prefix-scan RUNNING measures are emitted only when
-        provably bit-identical to ``_running_measure_values`` —
-        COUNT always; FIRST/LAST without logical offset; SUM/AVG on
-        integral columns (exact prefix arithmetic); MIN/MAX only under
-        FINAL mode (a per-segment running min cannot be reset by a
-        prefix trick) on natively comparable dtypes. Anything else
-        keeps the per-match ``_emit_all_rows`` loop."""
-        for kind, _sym, col, off, mode in specs:
-            mode = mode or "running"
-            if mode not in ("running", "final"):
-                return False
-            if kind == "count":
-                continue
-            if kind in ("first", "last"):
-                if off:
-                    return False
-                continue
-            if kind in ("sum", "avg"):
-                if arrs[col].dtype.kind not in "iu":
-                    return False
-                continue
-            if kind in ("min", "max"):
-                if mode != "final" or arrs[col].dtype.kind not in "iufM":
-                    return False
-                continue
-            return False
-        return True
-
-    def _emit_all_rows_batch(key_vals, los, his, arrs, syms):
-        """Vectorized ALL ROWS PER MATCH emission for the fast path:
-        every matched row of every match of the key at once. Row
-        universe = concatenated [lo, hi) spans; RUNNING measures are
-        global prefix scans minus the per-match offset at lo (COUNT:
-        cum[r+1]-cum[lo]; SUM: psum[r+1]-psum[lo]; FIRST/LAST: gather
-        through the hit-position array), FINAL measures are the
-        whole-match segment value repeated across the span. NULL and
-        empty-prefix semantics mirror ``_running_measure_values``
-        exactly (guard above)."""
-        lens = his - los
-        total = int(lens.sum())
-        m = los.shape[0]
-        offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        ridx = np.arange(total, dtype=np.int64) + np.repeat(los - offs, lens)
-        codes = np.frombuffer(syms.encode("utf-32-le"), dtype=np.uint32)
-        mask_cache: dict = {}
-        cum_cache: dict = {}
-
-        def _mask(symk):
-            mk = mask_cache.get(symk)
-            if mk is None:
-                if isinstance(symk, str):
-                    mk = codes == ord(sym_chars[symk])
-                else:
-                    mk = np.zeros(codes.shape[0], dtype=bool)
-                    for s in symk:
-                        mk |= codes == ord(sym_chars[s])
-                mask_cache[symk] = mk
-            return mk
-
-        def _cum(key, mk):
-            c = cum_cache.get(key)
-            if c is None:
-                c = np.concatenate(([0], np.cumsum(mk, dtype=np.int64)))
-                cum_cache[key] = c
-            return c
-
-        def _null_rows(dtype):
-            if dtype.kind == "M":
-                return np.full(total, np.datetime64("NaT"), dtype=dtype)
-            out = np.empty(total, dtype=object)
-            out[:] = None
-            return out
-
-        cols = [np.full(total, kv, dtype=object) for kv in key_vals]
-        cols.append(np.repeat(np.arange(1, m + 1, dtype=np.int64), lens))
-        cl = np.empty(total, dtype=object)
-        row_codes = codes[ridx]
-        for u in np.unique(row_codes):
-            cl[row_codes == u] = name_by_char[chr(u)]
-        cols.append(cl)
-        for c in order_by:
-            cols.append(arrs[c][ridx])
-        for spec in specs:
-            kind, symk, col, _off, mode = spec
-            mode = mode or "running"
-            # hit mask: symbol membership, plus non-null for COUNT(col)
-            # and the null-skipping aggregates
-            if kind == "count" and col is None:
-                mk = _mask(symk) if symk is not None else None
-            elif kind in ("first", "last"):
-                mk = _mask(symk) if symk is not None else None
-            else:
-                mk = ~pd.isna(arrs[col])
-                if symk is not None:
-                    mk = mk & _mask(symk)
-            if mk is None:  # every row of the match participates
-                mk = np.ones(codes.shape[0], dtype=bool)
-                ckey = ("__all__", kind in ("count",))
-            else:
-                ckey = (symk, col, kind)
-            c = _cum(ckey, mk)
-            clo = c[los]
-            rep_clo = np.repeat(clo, lens)
-            cr = c[ridx + 1]  # hits in [lo, r] per row
-            if kind == "count":
-                if mode == "final":
-                    cols.append(np.repeat(c[his] - clo, lens))
-                else:
-                    cols.append(cr - rep_clo)
-                continue
-            a = arrs[col]
-            if kind in ("first", "last"):
-                pos = np.flatnonzero(mk)
-                if mode == "final":
-                    chi = c[his]
-                    mvalid = chi > clo
-                    sel_m = np.where(
-                        mvalid, clo if kind == "first" else chi - 1, 0
-                    )
-                    valid = np.repeat(mvalid, lens)
-                    sel = np.repeat(sel_m, lens)
-                else:
-                    valid = cr > rep_clo
-                    sel = np.where(
-                        valid, rep_clo if kind == "first" else cr - 1, 0
-                    )
-                out = _null_rows(a.dtype)
-                if pos.shape[0] and valid.any():
-                    pv = a[pos[sel]]
-                    out[valid] = pv[valid]
-                cols.append(out)
-                continue
-            if kind in ("sum", "avg"):
-                acc_dtype = a.dtype if a.dtype == np.uint64 else np.int64
-                ps = np.concatenate(
-                    (
-                        [0],
-                        np.cumsum(np.where(mk, a, 0), dtype=acc_dtype),
-                    )
-                )
-                if mode == "final":
-                    cnt = np.repeat(c[his] - clo, lens)
-                    s = np.repeat(ps[his] - ps[los], lens)
-                else:
-                    cnt = cr - rep_clo
-                    s = ps[ridx + 1] - np.repeat(ps[los], lens)
-                nonempty = cnt > 0
-                out = np.empty(total, dtype=object)
-                out[:] = None
-                if kind == "avg":
-                    vals_f = s.astype(np.float64) / np.maximum(cnt, 1)
-                    out[nonempty] = vals_f[nonempty]
-                else:
-                    out[nonempty] = s[nonempty]
-                cols.append(out)
-                continue
-            # min / max — FINAL only (guard): segment reduceat + repeat
-            chi = c[his]
-            cnt_m = chi - clo
-            nonempty_m = cnt_m > 0
-            vpos = np.flatnonzero(mk)
-            out = _null_rows(a.dtype)
-            if vpos.shape[0] and nonempty_m.any():
-                av = a[vpos]
-                av2 = np.concatenate((av, av[:1]))
-                idx = np.empty(2 * m, dtype=np.int64)
-                idx[0::2] = clo
-                idx[1::2] = chi
-                op = np.minimum if kind == "min" else np.maximum
-                r = op.reduceat(av2, idx)[0::2]
-                mvals = _null_rows(a.dtype)[:m] if a.dtype.kind == "M" else None
-                if a.dtype.kind == "M":
-                    mvals[nonempty_m] = r[nonempty_m]
-                    out[:] = np.repeat(mvals, lens)
-                else:
-                    rep = np.repeat(r, lens)
-                    rep_ne = np.repeat(nonempty_m, lens)
-                    out[rep_ne] = rep[rep_ne]
-            cols.append(out)
-        return cols, total
+    name_by_char = cp.name_by_char
 
     def _df_from_arrays(arrays, index):
         """One-block-per-column frame: ``_from_arrays`` consolidates
@@ -1167,152 +980,33 @@ def match_recognize(
                 if len(okeys) == 1
                 else np.lexsort(okeys)
             )
-            arrs = {c: pdf[c].to_numpy()[idx] for c in data_cols}
+            arrs = {c: pdf[c].to_numpy()[idx] for c in base_cols}
             bools = {n: _np_bool(pdf[c])[idx] for n, c in bool_cols.items()}
             sym_np = sym_np[idx]
         except TypeError:
             pdf = pdf.sort_values(order_by, kind="mergesort")
             sym_np = pdf["__sym"].to_numpy()
-            arrs = {c: pdf[c].to_numpy() for c in data_cols}
+            arrs = {c: pdf[c].to_numpy() for c in base_cols}
             bools = {n: _np_bool(pdf[c]) for n, c in bool_cols.items()}
         key_vals = [arrs[c][0] for c in partition_by]
-        rows = []
         n = len(pdf)
-        # ambiguous iff any row satisfies two column defines or a callable
-        # define exists — only then pay for the Python NFA. Nullable
-        # patterns under a non-default skip mode also take the NFA: the
-        # fast-path scanner advances past a zero-width hit without
-        # retrying non-empty at the same position (unlike finditer and
-        # the NFA's require_consume retry), so 'A*?' + TO NEXT ROW would
-        # lose matches (ADVICE r5).
-        ambiguous = bool(fn_defines) or force_nfa
+        # the classifier string names every row's symbol iff no row
+        # satisfies two column defines and no callable define exists
+        ambiguous = bool(fn_defines)
         if not ambiguous and len(bools) > 1:
             stack = np.zeros(n, dtype=np.int8)
             for b in bools.values():
                 stack += b
             ambiguous = bool((stack > 1).any())
-        def _all_rows_measures(pairs):
-            return _running_measure_values(specs, arrs, pairs)
-
-        def _emit_all_rows(match_no, pairs):
-            # ALL ROWS PER MATCH: one row per matched input row
-            pairs = list(pairs)
-            mvals = _all_rows_measures(pairs) if specs else []
-            for pos, (idx, sym_name) in enumerate(pairs):
-                rows.append(
-                    [*key_vals, match_no, sym_name]
-                    + [arrs[c][idx] for c in order_by]
-                    + [mv[pos] for mv in mvals]
-                )
-
-        if not ambiguous:
-            # fast path: classifier string + host regex (C-level scans)
-            syms = "".join(sym_np.tolist())
-            match_no = 0
-
-            def host_matches():
-                if after_match == "past last row":
-                    yield from (
-                        (m.start(), m.end())
-                        for m in rx.finditer(syms)
-                        if m.end() > m.start()
-                    )
-                    return
-                # TO NEXT ROW: restart one past each match START;
-                # TO FIRST/LAST <sym>: restart AT that row of the match
-                pos = 0
-                while pos < n:
-                    m = rx.search(syms, pos)
-                    if m is None:
-                        return
-                    lo_, hi_ = m.start(), m.end()
-                    if hi_ == lo_:
-                        pos = lo_ + 1
-                        continue
-                    yield lo_, hi_
-                    if skip_sym is None:
-                        pos = lo_ + 1
-                    else:
-                        ch = sym_chars[skip_sym]
-                        t = (
-                            syms.find(ch, lo_, hi_)
-                            if skip_first
-                            else syms.rfind(ch, lo_, hi_)
-                        )
-                        if t < 0:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match}: "
-                                f"{skip_sym} absent from match"
-                            )
-                        if t == lo_:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match} would "
-                                "re-match the same starting row"
-                            )
-                        pos = t
-
-            if all_rows:
-                spans = list(host_matches())
-                if spans:
-                    frame = None
-                    # Engage the batch emitter only past ~256 matched
-                    # rows: its fixed per-key numpy setup (classifier
-                    # decode, masks, cumsums over the WHOLE key) beats
-                    # the per-match loop on big keys (the 100 TB shape)
-                    # but loses on the many-small-keys shape (measured
-                    # r12: 0.43s -> 0.55s kernel wall at ~67 rows/key);
-                    # small keys keep the row loop — identical output.
-                    n_matched = sum(hi_ - lo_ for lo_, hi_ in spans)
-                    if n_matched >= _ALL_ROWS_BATCH_MIN and _all_rows_batch_exact(
-                        arrs
-                    ):
-                        los = np.fromiter(
-                            (s[0] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
-                        his = np.fromiter(
-                            (s[1] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
-                        cols_b, total = _emit_all_rows_batch(
-                            key_vals, los, his, arrs, syms
-                        )
-                        frame = _frame_from_batch(cols_b, total)
-                    if frame is not None:
-                        return frame
-                    for lo, hi in spans:
-                        match_no += 1
-                        _emit_all_rows(
-                            match_no,
-                            [(i, name_by_char[syms[i]]) for i in range(lo, hi)],
-                        )
-            else:
-                spans = list(host_matches())
-                if spans:
-                    frame = None
-                    if _batch_aggs_exact(arrs):
-                        los = np.fromiter(
-                            (s[0] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
-                        his = np.fromiter(
-                            (s[1] for s in spans),
-                            dtype=np.int64,
-                            count=len(spans),
-                        )
-                        frame = _frame_from_batch(
-                            _emit_batch(key_vals, los, his, arrs, syms),
-                            len(spans),
-                        )
-                    if frame is not None:
-                        return frame
-                    for match_no, (lo, hi) in enumerate(spans, 1):
-                        rows.append(
-                            _emit(key_vals, match_no, lo, hi, arrs, syms=syms)
-                        )
+        syms = None if ambiguous else "".join(sym_np.tolist())
+        if syms is not None and after_match == "past last row":
+            # C-level scan: finditer's greedy non-overlapping matches ==
+            # SKIP PAST LAST ROW (zero-width hits are no matches)
+            found = [
+                (m.start(), m.end(), None)
+                for m in cp.rx.finditer(syms)
+                if m.end() > m.start()
+            ]
         else:
 
             def can_consume(sym, i, trail):
@@ -1332,50 +1026,25 @@ def match_recognize(
                 start_mask = (
                     masks[0] if len(masks) == 1 else np.logical_or.reduce(masks)
                 )
-
-            def nfa_matches():
-                if after_match == "past last row":
-                    yield from nfa.finditer(n, can_consume, start_mask)
-                    return
-                i = 0
-                while i < n:
-                    if start_mask is not None and not start_mask[i]:
-                        i += 1
-                        continue
-                    m = nfa.match_at(i, n, can_consume)
-                    if m is not None and m[0] == i:
-                        m = nfa.match_at(i, n, can_consume, require_consume=True)
-                    if m is None or m[0] == i:
-                        i += 1
-                        continue
-                    yield i, m[0], m[1]
-                    if skip_sym is None:
-                        i += 1
-                    else:
-                        ps = [idx for idx, s in m[1] if s == skip_sym]
-                        if not ps:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match}: "
-                                f"{skip_sym} absent from match"
-                            )
-                        t = ps[0] if skip_first else ps[-1]
-                        if t == i:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP {after_match} would "
-                                "re-match the same starting row"
-                            )
-                        i = t
-
-            match_no = 0
-            for lo, hi, assignment in nfa_matches():
-                match_no += 1
-                if all_rows:
-                    _emit_all_rows(match_no, assignment)
-                else:
-                    rows.append(
-                        _emit(key_vals, match_no, lo, hi, arrs, assignment=assignment)
-                    )
-        return _frame_from_rows(rows) if rows else empty_out
+            found, _ = _scan_matches(
+                cp.nfa, n, can_consume, *cp.skip, start_mask=start_mask, stable=False
+            )
+        if not found:
+            return empty_out
+        if syms is not None and not all_rows and _batch_aggs_exact(cp.specs, arrs):
+            los = np.fromiter((f[0] for f in found), dtype=np.int64, count=len(found))
+            his = np.fromiter((f[1] for f in found), dtype=np.int64, count=len(found))
+            frame = _frame_from_batch(
+                _emit_batch(cp, key_vals, los, his, arrs, syms), len(found)
+            )
+            if frame is not None:
+                return frame
+        rows = []
+        for match_no, (lo, hi, pairs) in enumerate(found, 1):
+            if pairs is None:
+                pairs = [(i, name_by_char[syms[i]]) for i in range(lo, hi)]
+            rows.extend(cp.match_rows(key_vals, match_no, pairs, arrs, order_by))
+        return _frame_from_rows(rows)
 
     # Explicit repartition: AQE would coalesce this tiny shuffle to 1-2
     # tasks, serializing the (CPU-bound) Python stage; a user repartition
@@ -1388,78 +1057,6 @@ def match_recognize(
         n_part = proj.sparkSession.sparkContext.defaultParallelism
         proj = proj.repartition(n_part, *partition_by)
     return proj.groupBy(*partition_by).applyInPandas(run, out_schema)
-
-
-def _stable_scan(
-    nfa,
-    n: int,
-    can,
-    after_match: str = "past last row",
-    skip_sym: "str | None" = None,
-    skip_first: bool = False,
-    start: int = 0,
-) -> tuple[list[tuple[int, int, list]], int]:
-    """Leftmost-greedy matches over a PARTIAL stream prefix: scan like
-    ``NFA.finditer`` but stop at the first position whose outcome could
-    still change with more input (some branch at or above the winning
-    priority probed past the buffer end). Returns (decided matches as
-    ``(lo, hi, assignment)``, boundary): everything before ``boundary``
-    is final — emit the matches, drop the prefix; rows from ``boundary``
-    on must stay buffered. The assignment (the NFA's ``[(row, sym),
-    ...]``) carries symbol attribution for rows classified by CALLABLE
-    defines, which have no classifier char.
-
-    ``after_match`` picks the restart policy (the SQL AFTER MATCH SKIP
-    clause, same semantics as the batch kernel's ``nfa_matches``):
-    ``past last row`` restarts at the match end (non-overlapping);
-    ``to next row`` one past the match START (overlapping); ``to
-    first/last <sym>`` at that row of the match (``skip_sym`` +
-    ``skip_first``). The stability argument is unchanged under every
-    mode: the restart position is a deterministic function of a DECIDED
-    match, the scan stops at the first probing position, and every
-    emitted match starts strictly before the returned boundary — so
-    dropping ``rows[:boundary]`` can never re-emit a match, whatever the
-    overlap.
-
-    ``start`` begins the scan mid-buffer: the streaming kernel retains
-    already-consumed HISTORY rows at the buffer front so PREV()
-    physical navigation can see across the consumption boundary —
-    those rows must never be rescanned (they would re-emit), so the
-    scan starts at the first unconsumed index."""
-    matches: list[tuple[int, int, list]] = []
-    i = start
-    while i < n:
-        probe = [False]
-        m = nfa.match_at(i, n, can, probe=probe)
-        if m is not None and m[0] == i:
-            # zero-width: the host engine retries non-empty at the same
-            # position; the retry's stability matters too
-            m = nfa.match_at(i, n, can, require_consume=True, probe=probe)
-        if probe[0]:
-            return matches, i
-        if m is None or m[0] == i:
-            i += 1
-            continue
-        matches.append((i, m[0], m[1]))
-        if after_match == "past last row":
-            i = m[0]
-        elif skip_sym is None:  # to next row
-            i += 1
-        else:
-            ps = [idx for idx, s in m[1] if s == skip_sym]
-            if not ps:
-                raise ValueError(
-                    f"AFTER MATCH SKIP {after_match}: "
-                    f"{skip_sym} absent from match"
-                )
-            t = ps[0] if skip_first else ps[-1]
-            if t == i:
-                raise ValueError(
-                    f"AFTER MATCH SKIP {after_match} would "
-                    "re-match the same starting row"
-                )
-            i = t
-    return matches, n
 
 
 def match_recognize_stream(
@@ -1478,11 +1075,13 @@ def match_recognize_stream(
     all_rows: bool = False,
     after_match: str = "past last row",
 ):
-    """Streaming MATCH_RECOGNIZE: the batch kernel run incrementally over
-    a per-key state buffer (``applyInPandasWithState``).
+    """Streaming MATCH_RECOGNIZE: the batch kernel's compile step and
+    measures run incrementally over a per-key state buffer
+    (``applyInPandasWithState``).
 
     Each micro-batch appends its (ordered) rows to the key's unconsumed
-    tail and runs a STABILITY-AWARE scan (``_stable_scan``): a match is
+    tail and runs the STABILITY-AWARE restart loop (``_scan_matches``
+    with ``stable=True``): a match is
     emitted only when no branch at or above its priority wanted a row
     beyond the buffer, so the emission is final whatever the next
     micro-batch delivers — the same hold-until-decided rule Flink's CEP
@@ -1508,7 +1107,7 @@ def match_recognize_stream(
     <sym>"``. Overlap is sound incrementally because the restart
     position depends only on a DECIDED (stability-probed) match and
     every emitted match starts strictly before the consumed boundary,
-    so dropped state can never re-emit — see ``_stable_scan``.
+    so dropped state can never re-emit — see ``_scan_matches``.
 
     ``event_time=True`` makes the kernel watermark-correct for
     OUT-OF-ORDER arrival (Beam's BeamMatchRel / Flink CEP event-time
@@ -1548,8 +1147,8 @@ def match_recognize_stream(
     contract, so ties within it are fully buffered and their order
     deterministic whatever the arrival order; tie-breaker columns stay
     measurable (only the ts column itself is held as integer
-    microseconds). Measures reference the same C-level str scan as the
-    batch kernel.
+    microseconds). Measures come from the batch kernel's evaluator over
+    the decided match's NFA assignment.
     ``with_classifier=True`` appends a ``classifier`` column holding
     the LAST matched row's symbol name (the SQL standard's
     CLASSIFIER() under ONE ROW PER MATCH — same contract as the batch
@@ -1593,46 +1192,10 @@ def match_recognize_stream(
     et_tie_cols = order_cols[1:] if event_time else []
     order_by = order_cols[0]
 
-    if not define:
-        raise ValueError("define must not be empty")
-    # AFTER MATCH SKIP modes (same surface as the batch kernel): the
-    # restart position is a deterministic function of a DECIDED match,
-    # so the stability probe carries over unchanged — see _stable_scan.
-    skip_sym: "str | None" = None
-    skip_first = False
-    m_skip = re.match(r"to (first|last) (\w+)$", after_match)
-    if m_skip:
-        skip_first = m_skip.group(1) == "first"
-        skip_sym = m_skip.group(2)
-        if skip_sym not in define:
-            raise ValueError(f"AFTER MATCH SKIP target {skip_sym!r} not in define")
-    elif after_match not in ("past last row", "to next row"):
-        raise ValueError(f"unsupported AFTER MATCH SKIP mode {after_match!r}")
-    subsets = subsets or {}
-    for uname, members in subsets.items():
-        if uname in define:
-            raise ValueError(f"SUBSET name {uname!r} collides with a DEFINE symbol")
-        bad = [m for m in members if m not in define]
-        if bad:
-            raise ValueError(f"SUBSET {uname!r} members {bad} not in define")
-    measures = {
-        name: _norm_spec(
-            name,
-            (
-                spec[0],
-                frozenset(subsets[spec[1]])
-                if isinstance(spec[1], str) and spec[1] in subsets
-                else spec[1],
-                *spec[2:],
-            ),
-        )
-        for name, spec in measures.items()
-    }
-    from .nfa import NFA, trail_bindings
-
-    sym_chars = _sym_chars(define)
-    rx = _compile_pattern(pattern, sym_chars)
-    if _ends_extendable(rx.pattern):
+    cp = _Compiled(
+        define, pattern, measures, subsets, after_match, all_rows, with_classifier
+    )
+    if _ends_extendable(cp.rx.pattern):
         raise ValueError(
             "streaming pattern must end with a non-extendable position "
             "(a trailing quantifier — even inside a group alternative or "
@@ -1640,10 +1203,7 @@ def match_recognize_stream(
             "batch, so matches would be held until a later symbol "
             "arrives)"
         )
-    nfa = NFA(pattern)
-
-    col_defines = {n: d for n, d in define.items() if isinstance(d, Column)}
-    fn_defines = {n: d for n, d in define.items() if not isinstance(d, Column)}
+    fn_defines = cp.fn_defines
     # PREV()/NEXT() physical navigation (compile_condition exposes the
     # worst-case excursions): retain max_prev consumed rows as history so
     # PREV sees across the consumption boundary, and hold back max_next
@@ -1655,72 +1215,23 @@ def match_recognize_stream(
         (getattr(d, "max_next", 0) for d in fn_defines.values()), default=0
     )
 
-    classifier: Column = F.lit(".")
-    for name in reversed(list(col_defines)):
-        classifier = F.when(col_defines[name], F.lit(sym_chars[name])).otherwise(
-            classifier
-        )
-
-    measure_cols = sorted({spec[2] for spec in measures.values() if spec[2]})
     keep = list(
         dict.fromkeys(
-            [*part_cols, *order_cols, *measure_cols, *(predicate_cols or [])]
+            [*part_cols, *order_cols, *cp.measure_cols, *(predicate_cols or [])]
         )
     )
-    if event_time and order_by in measure_cols:
+    if event_time and order_by in cp.measure_cols:
         raise ValueError(
             "event_time mode holds the order column as integer "
             "microseconds in state; measures must not reference it"
         )
-    proj = df.select(*keep, classifier.alias("__sym"))
+    proj = df.select(*keep, cp.classifier(define).alias("__sym"))
     if event_time:
         proj = proj.withWatermark(order_by, watermark_delay)
-    part_fields = [proj.schema[c] for c in part_cols]
-
-    def _measure_field(name: str, spec: tuple) -> T.StructField:
-        if spec[0] == "count":
-            return T.StructField(name, T.LongType())
-        if spec[0] == "avg":
-            return T.StructField(name, T.DoubleType())
-        return T.StructField(name, proj.schema[spec[2]].dataType)
-
-    if all_rows and with_classifier:
-        raise ValueError(
-            "with_classifier applies to ONE ROW PER MATCH only "
-            "(ALL ROWS already emits a per-row classifier column)"
-        )
-    if all_rows:
-        # decided streaming matches are FINAL (the stability probe), so
-        # per-row emission is sound: one output row per matched input
-        # row, with RUNNING/FINAL measures from the shared scanner —
-        # the same contract as the batch kernel's ALL ROWS mode
-        out_schema = T.StructType(
-            [*part_fields]
-            + [
-                T.StructField("match_number", T.LongType()),
-                T.StructField("classifier", T.StringType()),
-            ]
-            + [proj.schema[c] for c in order_cols]
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
-    else:
-        out_schema = T.StructType(
-            [*part_fields, T.StructField("match_number", T.LongType())]
-            + (
-                [T.StructField("classifier", T.StringType())]
-                if with_classifier
-                else []
-            )
-            + [_measure_field(n, s) for n, s in measures.items()]
-        )
+    out_schema = cp.out_schema(proj.schema, part_cols, order_cols)
     out_cols = [f.name for f in out_schema.fields]
-    # CLASSIFIER() under ONE ROW PER MATCH = the LAST matched row's
-    # symbol NAME (same contract as the batch kernel): invert the
-    # classifier-char table for column-define rows; callable-define
-    # rows get their name from the NFA assignment instead.
-    name_by_char = {c: n for n, c in sym_chars.items()}
+    sym_chars = cp.sym_chars
     state_schema = T.StructType([T.StructField("blob", T.StringType())])
-    specs = list(measures.values())
     data_cols = [c for c in keep if c not in part_cols]
     # static column->state-slot map (shared by the scan, measures, and
     # the sort). Multi-order rows store every column ONCE in the data
@@ -1818,157 +1329,18 @@ def match_recognize_stream(
             n_scan -= max_next
         n_scan = max(n_scan, h)
         syms = "".join(r[1] for r in rows)
-        out = []
-        if fn_defines or all_rows:
-            # buffered column views for match-state-dependent callables
-            # (and for the all-rows running-measure scanner)
-            arrs = {c: [r[ci] for r in rows] for c, ci in col_idx.items()}
+        arrs = {c: [r[ci] for r in rows] for c, ci in col_idx.items()}
 
         def can(sym, i, trail, s=syms):
             if sym in fn_defines:
                 return bool(fn_defines[sym](arrs, i, trail_bindings(trail)))
             return s[i] == sym_chars[sym]
 
-        decided, consumed = _stable_scan(
-            nfa, n_scan, can, after_match, skip_sym, skip_first, start=h
-        )
-        for lo, hi, assignment in decided:
+        decided, consumed = _scan_matches(cp.nfa, n_scan, can, *cp.skip, start=h)
+        out = []
+        for _lo, _hi, assignment in decided:
             blob["mn"] += 1
-            if all_rows:
-                if fn_defines:
-                    pairs = sorted(assignment)
-                else:
-                    pairs = [
-                        (i, name_by_char[syms[i]]) for i in range(lo, hi)
-                    ]
-                mvals = _running_measure_values(specs, arrs, pairs)
-                for pos, (idx, sname) in enumerate(pairs):
-                    # col_idx maps every order column in every layout
-                    # (slot 0 for the single/event-time primary)
-                    ovals = [rows[idx][col_idx[c]] for c in order_cols]
-                    out.append(
-                        [*key, blob["mn"], sname, *ovals]
-                        + [mv[pos] for mv in mvals]
-                    )
-                continue
-            if fn_defines:
-                # rows taken by callable symbols carry no classifier
-                # char — symbol attribution must come from the NFA's
-                # assignment (same contract as the batch NFA path)
-                pos_by_sym: dict[str, list[int]] = {}
-                for idx, s in assignment:
-                    pos_by_sym.setdefault(s, []).append(idx)
-            else:
-                pos_by_sym = None
-            vals = []
-            for spec in specs:
-                kind, sym, col, off, _mode = spec
-                if (
-                    kind in ("sum", "avg", "min", "max")
-                    or isinstance(sym, frozenset)
-                    or off
-                    or pos_by_sym is not None
-                ):
-                    # generic path: SUBSET union symbols / aggregates /
-                    # logical-offset navigation / callable-define
-                    # attribution (same contract as the batch kernel's
-                    # _span_idxs)
-                    if pos_by_sym is not None and sym is not None:
-                        names = (sym,) if isinstance(sym, str) else sym
-                        idxs = sorted(
-                            i
-                            for s2 in names
-                            for i in pos_by_sym.get(s2, ())
-                        )
-                    else:
-                        chars = (
-                            None
-                            if sym is None
-                            else {
-                                sym_chars[s]
-                                for s in ((sym,) if isinstance(sym, str) else sym)
-                            }
-                        )
-                        idxs = [
-                            i
-                            for i in range(lo, hi)
-                            if chars is None or syms[i] in chars
-                        ]
-                    if kind == "count":
-                        if col is None:
-                            vals.append(len(idxs))
-                        else:
-                            ci = col_idx[col]
-                            vals.append(
-                                sum(
-                                    1
-                                    for i in idxs
-                                    if rows[i][ci] is not None
-                                    and rows[i][ci] == rows[i][ci]
-                                )
-                            )
-                        continue
-                    if kind in ("first", "last"):
-                        if len(idxs) <= off:
-                            i = -1
-                        else:
-                            i = idxs[off] if kind == "first" else idxs[-1 - off]
-                        vals.append(rows[i][col_idx[col]] if i >= 0 else None)
-                        continue
-                    ci = col_idx[col]
-                    xs = [
-                        rows[i][ci]
-                        for i in idxs
-                        if rows[i][ci] is not None and rows[i][ci] == rows[i][ci]
-                    ]
-                    if not xs:
-                        vals.append(None)
-                    elif kind == "sum":
-                        vals.append(sum(xs))
-                    elif kind == "avg":
-                        vals.append(float(sum(xs)) / len(xs))
-                    elif kind == "min":
-                        vals.append(min(xs))
-                    else:
-                        vals.append(max(xs))
-                    continue
-                if kind == "count":
-                    if col is not None:
-                        # COUNT(Sym.col): non-null col values on Sym's rows
-                        ch = sym_chars[sym] if sym is not None else None
-                        ci = col_idx[col]
-                        # state rows come via itertuples: missing floats
-                        # are NaN, not None — treat both as null
-                        vals.append(
-                            sum(
-                                1
-                                for i in range(lo, hi)
-                                if (ch is None or syms[i] == ch)
-                                and rows[i][ci] is not None
-                                and rows[i][ci] == rows[i][ci]
-                            )
-                        )
-                    else:
-                        vals.append(
-                            hi - lo
-                            if sym is None
-                            else syms.count(sym_chars[sym], lo, hi)
-                        )
-                    continue
-                if kind == "first":
-                    i = lo if sym is None else syms.find(sym_chars[sym], lo, hi)
-                elif kind == "last":
-                    i = hi - 1 if sym is None else syms.rfind(sym_chars[sym], lo, hi)
-                else:
-                    raise ValueError(f"unknown measure kind {kind!r}")
-                vals.append(rows[i][col_idx[col]] if i >= 0 else None)
-            if with_classifier:
-                if pos_by_sym is not None:
-                    last_sym = max(assignment, key=lambda p: p[0])[1]
-                else:
-                    last_sym = name_by_char[syms[hi - 1]]
-                vals.insert(0, last_sym)
-            out.append([*key, blob["mn"], *vals])
+            out.extend(cp.match_rows(key, blob["mn"], assignment, arrs, order_cols))
         if not event_time and consumed > 0:
             last = rows[consumed - 1]
             blob["lk"] = (

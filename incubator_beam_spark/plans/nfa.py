@@ -303,38 +303,6 @@ class NFA:
                     stack.append(tgt)
         return first, nullable
 
-    def finditer(
-        self,
-        n: int,
-        can_consume: Callable[[str, int, tuple | None], bool],
-        start_mask=None,
-    ):
-        """Non-overlapping greedy matches over rows 0..n-1 — AFTER MATCH
-        SKIP PAST LAST ROW. Yields (lo, hi, [(row_idx, sym), ...]).
-
-        Zero-width handling mirrors the host regex engine (the batch
-        kernel's fast path, so both paths stay interchangeable): a
-        zero-width match at ``i`` is retried at the SAME position with
-        the empty match disallowed — ``A*?`` over ``A`` still yields the
-        one-row match — and only a non-empty failure advances the
-        scan. ``start_mask`` (bool per row), when given, skips positions
-        where no first-set symbol matches — pure pruning, only valid
-        for non-nullable patterns (see ``first_symbols``)."""
-        i = 0
-        while i < n:
-            if start_mask is not None and not start_mask[i]:
-                i += 1
-                continue
-            m = self.match_at(i, n, can_consume)
-            if m is not None and m[0] == i:  # zero-width: retry non-empty
-                m = self.match_at(i, n, can_consume, require_consume=True)
-            if m is None:
-                i += 1
-                continue
-            hi, assignment = m
-            yield i, hi, assignment
-            i = hi
-
 
 def trail_bindings(trail: tuple | None) -> dict[str, list[int]]:
     """Unwind a trail node into ``{symbol: [row indices]}`` — the partial

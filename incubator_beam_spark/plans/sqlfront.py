@@ -22,6 +22,7 @@ Spark's catalog (SURVEY.md §2.8).
 from __future__ import annotations
 
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -486,8 +487,6 @@ def run_sql(spark: SparkSession, query: str) -> DataFrame:
     general semantics of the reference's ``impl/nfa/NFA.java``."""
     mr = _parse_match_recognize(query)
     if mr is not None:
-        import uuid
-
         from .cep import match_recognize
 
         from pyspark.sql import functions as F
@@ -560,21 +559,30 @@ def run_sql(spark: SparkSession, query: str) -> DataFrame:
             kw["with_classifier"] = True
         expr_measures = kw.pop("expr_measures", None)
         out = match_recognize(df, **kw)
-        if expr_measures:
-            internal = [
-                n for n in kw["measures"] if re.fullmatch(r"__m\d+", n)
-            ]
-            out = out.selectExpr(
-                "*", *[f"({e}) AS {a}" for a, e in expr_measures.items()]
-            ).drop(*internal)
-        if rename_mn:
-            out = out.withColumnRenamed("match_number", rename_mn)
-        if rename_cls:
-            out = out.withColumnRenamed("classifier", rename_cls)
-        view = f"__mr_{uuid.uuid4().hex[:10]}"
-        out.createOrReplaceTempView(view)
-        return spark.sql(rewrite(rest.replace("{MR}", view)))
+        return _reenter(
+            spark, out, kw["measures"], expr_measures, rename_mn, rename_cls, rest
+        )
     return spark.sql(rewrite(query))
+
+
+def _reenter(spark, out, measures, expr_measures, rename_mn, rename_cls, rest):
+    """The kernel-output half both MATCH_RECOGNIZE front doors share:
+    evaluate expression measures over the internal ``__mN`` kernel
+    measures (then drop those), apply the MATCH_NUMBER() /
+    CLASSIFIER() aliases, and re-enter the surrounding query through a
+    temp view."""
+    if expr_measures:
+        internal = [n for n in measures if re.fullmatch(r"__m\d+", n)]
+        out = out.selectExpr(
+            "*", *[f"({e}) AS {a}" for a, e in expr_measures.items()]
+        ).drop(*internal)
+    if rename_mn:
+        out = out.withColumnRenamed("match_number", rename_mn)
+    if rename_cls:
+        out = out.withColumnRenamed("classifier", rename_cls)
+    view = f"__mr_{uuid.uuid4().hex[:10]}"
+    out.createOrReplaceTempView(view)
+    return spark.sql(rewrite(rest.replace("{MR}", view)))
 
 
 def run_sql_stream(
@@ -610,7 +618,7 @@ def run_sql_stream(
     is sound), every AFTER MATCH SKIP mode (PAST LAST ROW / TO NEXT
     ROW / TO FIRST|LAST <sym> — overlap is sound incrementally because
     the restart position depends only on a decided match; see
-    ``_stable_scan``), PREV()/NEXT() physical navigation in DEFINE
+    ``_scan_matches``), PREV()/NEXT() physical navigation in DEFINE
     (lag's frame is physical rows the state buffer already holds: the
     condition compiles to a match-state callable that reads the
     navigated buffer row, the kernel retains max_prev consumed rows as
@@ -631,8 +639,6 @@ def run_sql_stream(
     mr = _parse_match_recognize(query)
     if mr is None:
         return spark.sql(rewrite(query))
-    import uuid
-
     from pyspark.sql import functions as F
 
     from .cep import match_recognize_stream
@@ -694,15 +700,6 @@ def run_sql_stream(
         all_rows=kw["all_rows"],
         after_match=kw["after_match"],
     )
-    if expr_measures:
-        internal = [n for n in kw["measures"] if re.fullmatch(r"__m\d+", n)]
-        out = out.selectExpr(
-            "*", *[f"({e}) AS {a}" for a, e in expr_measures.items()]
-        ).drop(*internal)
-    if rename_mn:
-        out = out.withColumnRenamed("match_number", rename_mn)
-    if rename_cls:
-        out = out.withColumnRenamed("classifier", rename_cls)
-    view = f"__mrs_{uuid.uuid4().hex[:10]}"
-    out.createOrReplaceTempView(view)
-    return spark.sql(rewrite(rest.replace("{MR}", view)))
+    return _reenter(
+        spark, out, kw["measures"], expr_measures, rename_mn, rename_cls, rest
+    )

@@ -849,7 +849,7 @@ def stream_cep_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit-per-buffer kernel yields a 1-click match where the whole run
     pairs them (the exact counterexample the split-invariance fuzz
     found), so this gate hash-fails on any regression of the
-    hold-until-decided scan (plans/cep.py _stable_scan). Delivery:
+    hold-until-decided scan (plans/cep.py _scan_matches). Delivery:
     events split at the median event_id into two parquet files with
     mtimes 10s apart, maxFilesPerTrigger=1 — FileStreamSource processes
     oldest-first, so batch order is deterministic and in event order.

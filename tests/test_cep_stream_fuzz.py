@@ -2,9 +2,10 @@
 
 ``match_recognize_stream`` claims: if the pattern ends at a
 non-extendable position (``_ends_extendable`` is False), then running
-the batch kernel incrementally — append chunk, finditer, emit, drop the
-consumed prefix (AFTER MATCH SKIP PAST LAST ROW) — produces EXACTLY the
-matches a single whole-sequence run produces, for every chunking.
+the scan incrementally — append chunk, run the restart loop with its
+stability probe (``_scan_matches``), emit the decided matches, drop the
+decided prefix — produces EXACTLY the matches a single whole-sequence
+run produces, for every chunking.
 
 That claim is the entire correctness argument for the streaming CEP
 path, and it is pure string/regex logic, so hypothesis can attack it
@@ -15,12 +16,15 @@ match no define), random chunk boundaries. Patterns the guard rejects
 (extendable ends) are skipped — they are exactly the ones the stream
 API refuses at construction.
 
-This mirrors the incremental loop of ``match_recognize_stream.fn``
-(cep.py): same finditer, same consumed-prefix drop, same zero-length
-skip. If someone edits the kernel's consumption logic, this fuzz breaks
-unless whole-run equivalence still holds.
+The loops below drive the kernel's own ``_scan_matches`` (the restart
+loop both kernels share) with the consumed-prefix drop of
+``match_recognize_stream.fn``; the whole-sequence side is the host
+regex's ``finditer`` (the batch kernel's classifier-string path) or an
+independent reference. If someone edits the kernel's consumption
+logic, this fuzz breaks unless whole-run equivalence still holds. The
+last test checks the batch kernel's two ONE ROW measure paths
+(``_emit_batch`` and the per-match evaluator) against each other.
 """
-
 from __future__ import annotations
 
 from hypothesis import assume, given, settings
@@ -61,9 +65,9 @@ def whole_run(rx, s: str) -> list[tuple[int, int, int]]:
 
 def incremental_run(pattern: str, s: str, sizes) -> list[tuple[int, int, int]]:
     """The REAL streaming consumption loop: per chunk arrival, run
-    ``_stable_scan`` (the kernel's hold-until-decided scan) over the
+    ``_scan_matches`` (the kernel's hold-until-decided scan) over the
     buffered tail, emit decided matches, drop the decided prefix."""
-    from incubator_beam_spark.plans.cep import _stable_scan
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA
 
     nfa = NFA(pattern)
@@ -84,7 +88,7 @@ def incremental_run(pattern: str, s: str, sizes) -> list[tuple[int, int, int]]:
         def can(sym, i, trail, b=buf):
             return b[i] == CHARS[sym]
 
-        decided, boundary = _stable_scan(nfa, len(buf), can)
+        decided, boundary = _scan_matches(nfa, len(buf), can)
         for lo, hi, _assignment in decided:
             mn += 1
             out.append((mn, base + lo, base + hi))
@@ -137,6 +141,7 @@ def test_stream_never_emits_unconfirmed(pattern, stream, sizes):
 def test_nfa_matches_host_regex_grammar_wide(pattern, stream):
     import re as _re
 
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA
 
     try:
@@ -149,9 +154,12 @@ def test_nfa_matches_host_regex_grammar_wide(pattern, stream):
     def can(sym, i, trail, s=s):
         return s[i] == CHARS[sym]
 
-    got = [(lo, hi) for lo, hi, _ in nfa.finditer(len(s), can)]
+    # the batch kernel's NFA path: the shared restart loop over the
+    # whole input
+    whole, boundary = _scan_matches(nfa, len(s), can, stable=False)
     want = [(m.start(), m.end()) for m in rx.finditer(s) if m.end() > m.start()]
-    assert got == want, (pattern, s)
+    assert [(lo, hi) for lo, hi, _ in whole] == want, (pattern, s)
+    assert boundary == len(s)
 
 
 # ---------------------------------------------------------------------------
@@ -277,6 +285,7 @@ def test_nfa_cross_symbol_matches_reference(vals, tags, pat):
     the independent CPS reference matcher on random sequences: same
     spans AND same symbol assignments (leftmost-greedy, non-overlapping,
     skip past last row)."""
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA, parse_pattern, trail_bindings
 
     n = min(len(vals), len(tags))
@@ -307,7 +316,7 @@ def test_nfa_cross_symbol_matches_reference(vals, tags, pat):
         return _can_dict(sym, i, trail_bindings(trail))
 
     nfa = NFA(pat)
-    got = list(nfa.finditer(n, can_nfa))
+    got, _ = _scan_matches(nfa, n, can_nfa, stable=False)
     want = _ref_finditer(parse_pattern(pat), n, can_ref)
     assert got == want, (pat, vals, tags)
 
@@ -319,7 +328,7 @@ def incremental_run_with_assignment(pattern: str, s: str, sizes):
     assignment, so split-invariance of spans alone is not enough; a
     batch boundary that shifted attribution by one row would corrupt
     measures while leaving spans intact."""
-    from incubator_beam_spark.plans.cep import _stable_scan
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA
 
     nfa = NFA(pattern)
@@ -339,7 +348,7 @@ def incremental_run_with_assignment(pattern: str, s: str, sizes):
         def can(sym, i, trail, b=buf):
             return b[i] == CHARS[sym]
 
-        decided, boundary = _stable_scan(nfa, len(buf), can)
+        decided, boundary = _scan_matches(nfa, len(buf), can)
         for lo, hi, assignment in decided:
             out.append(
                 (base + lo, base + hi, tuple((base + r, y) for r, y in assignment))
@@ -358,7 +367,7 @@ def test_stream_assignment_equals_batch_assignment(pattern, stream, sizes):
     whole-buffer scan. Guards the streaming measure path end to end —
     prefix drops re-base the buffer, and a re-basing bug would show up
     here as a shifted (row, symbol) pair."""
-    from incubator_beam_spark.plans.cep import _stable_scan
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA
 
     try:
@@ -371,7 +380,7 @@ def test_stream_assignment_equals_batch_assignment(pattern, stream, sizes):
     def can(sym, i, trail, b=s):
         return b[i] == CHARS[sym]
 
-    whole, boundary = _stable_scan(nfa, len(s), can)
+    whole, boundary = _scan_matches(nfa, len(s), can)
     assert boundary == len(s)  # terminated buffer fully decides
     want = [
         (lo, hi, tuple((r, y) for r, y in assignment))
@@ -383,7 +392,7 @@ def test_stream_assignment_equals_batch_assignment(pattern, stream, sizes):
 
 # ---------------------------------------------------------------------------
 # AFTER MATCH SKIP modes (round-8 streaming lift): the incremental
-# _stable_scan restart policy must equal an INDEPENDENT host-regex
+# _scan_matches restart policy must equal an INDEPENDENT host-regex
 # implementation of the same SQL clause (the batch fast path's
 # char-scan restarts — C regex engine + str.find, no NFA machinery),
 # under every chunking. Errors (skip target absent / would re-match the
@@ -426,11 +435,11 @@ def whole_run_skip(rx, s, skip_ch, skip_first):
 
 def incremental_run_skip(pattern, s, sizes, after_match, skip_sym, skip_first):
     """The REAL streaming consumption loop under a skip mode: per chunk,
-    _stable_scan with the restart policy, flush decided matches, drop
+    _scan_matches with the restart policy, flush decided matches, drop
     the decided prefix. A ValueError mid-scan kills that micro-batch —
     its decided-so-far matches are lost, exactly like the live kernel —
     so the return is (flushed-before-error, err_flag)."""
-    from incubator_beam_spark.plans.cep import _stable_scan
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA
 
     nfa = NFA(pattern)
@@ -452,7 +461,7 @@ def incremental_run_skip(pattern, s, sizes, after_match, skip_sym, skip_first):
             return b[i] == CHARS[sym]
 
         try:
-            decided, boundary = _stable_scan(
+            decided, boundary = _scan_matches(
                 nfa, len(buf), can, after_match, skip_sym, skip_first
             )
         except ValueError:
@@ -480,13 +489,14 @@ skip_modes = st.sampled_from(
 @settings(max_examples=400, deadline=None)
 @given(pattern=patterns, stream=streams, sizes=chunkings, mode=skip_modes)
 def test_stream_skip_modes_equal_host_reference(pattern, stream, sizes, mode):
-    """Non-nullable patterns only — exactly the set the batch kernel's
-    host-regex fast path handles under skip modes (``force_nfa`` routes
-    nullable+skip to the NFA: a nullable pattern's zero-width hit takes
-    a require-consume retry the C engine's plain search-from-pos loop
-    does not). Nullable patterns get the chunking-invariance check
-    below instead."""
-    from incubator_beam_spark.plans.cep import _is_nullable
+    """Non-nullable patterns only — the set where a plain host-regex
+    search-from-pos loop implements the clause (a nullable pattern's
+    zero-width hit takes a require-consume retry that loop does not).
+    Nullable patterns get the chunking-invariance check below instead.
+    The whole-input scan the batch kernel runs (``stable=False``) must
+    agree with the same reference."""
+    from incubator_beam_spark.plans.cep import _is_nullable, _scan_matches
+    from incubator_beam_spark.plans.nfa import NFA
 
     after_match, skip_sym, skip_first = mode
     try:
@@ -508,10 +518,24 @@ def test_stream_skip_modes_equal_host_reference(pattern, stream, sizes, mode):
     else:
         assert not gerr and got == want, (pattern, s, mode)
 
+    def can(sym, i, trail):
+        return s[i] == CHARS[sym]
+
+    try:
+        whole, _ = _scan_matches(
+            NFA(pattern), len(s), can, after_match, skip_sym, skip_first,
+            stable=False,
+        )
+    except ValueError:
+        assert werr, (pattern, s, mode)
+    else:
+        assert not werr, (pattern, s, mode)
+        assert [(k, lo, hi) for k, (lo, hi, _) in enumerate(whole, 1)] == want
+
 
 def ref_run_skip(pattern, s, after_match, skip_sym, skip_first):
     """Whole-sequence reference for the skip-mode scan over ANY pattern
-    (nullable included): the batch kernel's ``nfa_matches`` policy with
+    (nullable included): the ``_scan_matches`` restart policy with
     the error cases returned as a flag INSTEAD of raising, so matches
     decided before the error survive for the prefix comparison (a
     raising scan discards its own decided-so-far list — real kernel
@@ -650,7 +674,7 @@ def _nav_defines(exprs):
 
 
 def incremental_nav_run(pattern, vals, sizes, defines):
-    from incubator_beam_spark.plans.cep import _stable_scan
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA, trail_bindings
 
     max_prev = max(d.max_prev for d in defines.values())
@@ -676,7 +700,7 @@ def incremental_nav_run(pattern, vals, sizes, defines):
             return bool(fn(a, i, trail_bindings(trail))) if fn else False
 
         n_scan = max(len(buf) - max_next, h)
-        decided, consumed = _stable_scan(nfa, n_scan, can, start=h)
+        decided, consumed = _scan_matches(nfa, n_scan, can, start=h)
         for lo, hi, _assignment in decided:
             mn += 1
             out.append((mn, base + lo, base + hi))
@@ -780,7 +804,7 @@ def incremental_compound_nav_run(pattern, rows, sizes, defines, rng):
     intra-batch permutation, then the buffer re-sorts by the composite
     key exactly as match_recognize_stream.fn does (stable sort over
     [key columns] — arrival position is NOT part of the key)."""
-    from incubator_beam_spark.plans.cep import _stable_scan
+    from incubator_beam_spark.plans.cep import _scan_matches
     from incubator_beam_spark.plans.nfa import NFA, trail_bindings
 
     max_prev = max(d.max_prev for d in defines.values())
@@ -809,7 +833,7 @@ def incremental_compound_nav_run(pattern, rows, sizes, defines, rng):
             return bool(fn(a, i, trail_bindings(trail))) if fn else False
 
         n_scan = max(len(buf) - max_next, h)
-        decided, consumed = _stable_scan(nfa, n_scan, can, start=h)
+        decided, consumed = _scan_matches(nfa, n_scan, can, start=h)
         for lo, hi, _assignment in decided:
             mn += 1
             out.append((mn, consumed_keys + lo, consumed_keys + hi))
@@ -949,4 +973,124 @@ def test_nav_excursion_bounds_are_sufficient(seed, vals, thr):
             f"{cond!r}: position {i} differs on the retention window "
             f"[{i - mp}, {i + mn}] (max_prev={mp}, max_next={mn}) — "
             f"excursion under-counted"
+        )
+
+
+# ---------------------------------------------------------------------------
+# The batch kernel's two ONE ROW measure paths: the vectorized
+# ``_emit_batch`` (classifier-string keys, inside the ``_batch_aggs_exact``
+# envelope) must equal the per-match evaluator every other path uses, over
+# random classifier strings, overlapping spans (the skip modes' shape),
+# NULL-bearing columns as Arrow hands them to pandas (an integer column
+# with NULLs arrives as float64 + NaN, a timestamp column as
+# datetime64 + NaT, a string column as object + None) and every measure
+# kind the envelope admits.
+# ---------------------------------------------------------------------------
+
+_MEASURE_SYMS = [None, "A", "B", "C", "U"]  # U = SUBSET (A, B)
+
+
+def _one_row_specs(draw):
+    """A random MEASURES dict inside the ``_batch_aggs_exact`` envelope:
+    SUM/AVG on the integral column, MIN/MAX on natively comparable ones,
+    FIRST/LAST (with offsets) and COUNT on any column."""
+    kinds = [
+        ("count",),
+        ("count", "iv"), ("count", "ni"), ("count", "ts"), ("count", "sv"),
+        ("first", "iv"), ("first", "ni"), ("first", "ts"), ("first", "sv"),
+        ("last", "iv"), ("last", "ni"), ("last", "ts"), ("last", "sv"),
+        ("sum", "iv"), ("avg", "iv"),
+        ("min", "iv"), ("min", "ni"), ("min", "ts"),
+        ("max", "iv"), ("max", "ni"), ("max", "ts"),
+    ]
+    picked = draw(st.lists(st.sampled_from(kinds), min_size=1, max_size=8))
+    measures = {}
+    for j, kc in enumerate(picked):
+        sym = draw(st.sampled_from(_MEASURE_SYMS))
+        spec = (kc[0], sym, *kc[1:])
+        if kc[0] in ("first", "last"):
+            spec += (draw(st.integers(0, 2)),)
+        measures[f"m{j}"] = spec
+    return measures
+
+
+def _norm_cell(v):
+    import numpy as np
+    import pandas as pd
+
+    if v is None or (not isinstance(v, str) and pd.isna(v)):
+        return None
+    if isinstance(v, (np.datetime64, pd.Timestamp)):
+        return pd.Timestamp(v)
+    if isinstance(v, np.integer):
+        return int(v)
+    if isinstance(v, np.floating):
+        return float(v)
+    return v
+
+
+@settings(max_examples=300, deadline=None)
+@given(data=st.data())
+def test_emit_batch_equals_measure_evaluator(data):
+    import numpy as np
+
+    from incubator_beam_spark.plans.cep import (
+        _batch_aggs_exact,
+        _Compiled,
+        _emit_batch,
+    )
+
+    n = data.draw(st.integers(1, 30))
+    syms = "".join(data.draw(st.lists(
+        st.sampled_from("AABBC."), min_size=n, max_size=n
+    )))
+    spans = data.draw(st.lists(
+        st.tuples(st.integers(0, n - 1), st.integers(1, 6)), min_size=1,
+        max_size=8,
+    ))
+    # a match covers symbol rows only, and spans come in start order
+    spans = sorted(
+        (lo, min(n, lo + k)) for lo, k in spans
+        if "." not in syms[lo : min(n, lo + k)]
+    )
+    assume(spans)
+    ints = data.draw(st.lists(st.integers(-50, 50), min_size=n, max_size=n))
+    nulls = data.draw(st.lists(st.booleans(), min_size=n, max_size=n))
+    arrs = {
+        "iv": np.array(ints, dtype=np.int64),
+        "ni": np.array(
+            [np.nan if z else float(v) for v, z in zip(ints, nulls)]
+        ),
+        "ts": np.array(
+            [
+                np.datetime64("NaT") if z
+                else np.datetime64("2024-01-01") + np.timedelta64(v, "s")
+                for v, z in zip(reversed(ints), nulls)
+            ],
+            dtype="datetime64[ns]",
+        ),
+        "sv": np.array(
+            [None if z else f"s{v}" for v, z in zip(ints, reversed(nulls))],
+            dtype=object,
+        ),
+    }
+    cp = _Compiled(
+        define=dict.fromkeys("ABC", lambda arrs, i, bindings: True),
+        pattern="A",
+        measures=_one_row_specs(data.draw),
+        subsets={"U": ["A", "B"]},
+        after_match="past last row",
+        all_rows=False,
+        with_classifier=data.draw(st.booleans()),
+    )
+    assert _batch_aggs_exact(cp.specs, arrs)
+    los = np.array([lo for lo, _ in spans], dtype=np.int64)
+    his = np.array([hi for _, hi in spans], dtype=np.int64)
+    cols = _emit_batch(cp, ["k"], los, his, arrs, syms)
+    for j, (lo, hi) in enumerate(spans):
+        pairs = [(i, cp.name_by_char[syms[i]]) for i in range(lo, hi)]
+        (want,) = cp.match_rows(["k"], j + 1, pairs, arrs, [])
+        got = [col[j] for col in cols]
+        assert [_norm_cell(v) for v in got] == [_norm_cell(v) for v in want], (
+            syms, lo, hi, cp.specs
         )

@@ -3270,3 +3270,309 @@ def test_minhash_index_compact_preserves_content(spark, duck):
     assert_matches_oracle_strict(
         out, duck, MINHASH_INDEX_COMPACT_ORACLE, "doc_minhash_index_compact"
     )
+
+
+# -- subtree materialization, vectorized kernels and plan pins --------------
+
+
+def test_materialize_once_identity_and_streaming_passthrough(spark):
+    df = spark.range(100).withColumn("x", F.col("id") * 2)
+    out = dedup.materialize_once(df)
+    assert sorted(r.x for r in out.collect()) == [2 * i for i in range(100)]
+    # streaming frames must pass through unchanged (no checkpoint attempt)
+    sdf = spark.readStream.format("rate").load()
+    assert dedup.materialize_once(sdf) is sdf
+
+
+def test_minhash_pairs_signature_materialized_once(spark):
+    """The optimization's plan pin: the signature subtree is computed into
+    stored blocks (ExistingRDD leaf) and the expensive minhash aggregate
+    no longer appears in the main query plan at all — before r11 it was
+    evaluated 4x (ReuseExchange cannot canonicalize HOF lambdas)."""
+    from incubator_beam_spark.dataops.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta {i}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    import contextlib
+    import io
+
+    df = minhash_lsh_pairs(docs)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "ExistingRDD" in plan
+    # the signature HOF (aggregate over the shingle md5 pairs) must not be
+    # re-evaluated inside the pair query itself
+    assert "aggregate(" not in plan.lower().replace("hashaggregate", "")
+
+
+def test_gram_kernel_matches_explode_formulation(spark):
+    """emb_second_moments' numpy X^T X kernel must be row-for-row equal to
+    the old flatten-transform explode, including MIXED vector lengths
+    (each length contributes pairs only up to its own dimension)."""
+    rows = [
+        ([0.11, -0.27, 0.05],),
+        ([0.42, 0.0, -1.3],),
+        ([0.9, 0.0001],),  # shorter vector
+        ([-0.5, 0.25],),
+    ]
+    df = spark.createDataFrame(rows, "embedding array<double>")
+
+    # the PRE-r11 explode formulation, verbatim, as the reference
+    vq = "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(round(x * 10000) AS BIGINT))"
+    pair_expr = """
+      flatten(transform(sequence(1, size(vq)), i ->
+        transform(concat(array(0), sequence(i, size(vq))), j ->
+          struct(CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
+                 IF(j = 0, element_at(vq, i),
+                    element_at(vq, i) * element_at(vq, j)) AS xy))))
+    """
+    ref = (
+        df.selectExpr(f"{vq} AS vq")
+        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .groupBy(F.col("p.i").alias("i"), F.col("p.j").alias("j"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("p.xy").alias("sxy"))
+        .collect()
+    )
+
+    from incubator_beam_spark.queries import dataops as qd
+
+    # drive the registered implementation through a temp parquet dir
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix="gram_probe_")
+    df.write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    got = qd.emb_second_moments(spark, d).collect()
+    assert sorted((r.i, r.j, r.n, r.sxy) for r in got) == sorted(
+        (r.i, r.j, r.n, r.sxy) for r in ref
+    )
+
+
+def test_gram_kernel_empty_and_null_embeddings(spark):
+    """ADVICE r11 (medium): a NULL or zero-length embedding slot made the
+    mapInArrow Gram kernel raise (reshape of size 0 into shape (0));
+    the explode formulation emitted nothing for such rows. Pin the
+    no-crash + row-for-row equality on a frame mixing null, empty and
+    mixed-length embeddings."""
+    rows = [
+        ([0.11, -0.27, 0.05],),
+        (None,),  # null embedding: contributes nothing
+        ([],),  # empty embedding: contributes nothing
+        ([0.9, 0.0001],),
+        ([-0.5, 0.25],),
+    ]
+    df = spark.createDataFrame(rows, "embedding array<double>")
+
+    vq = "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(round(x * 10000) AS BIGINT))"
+    pair_expr = """
+      flatten(transform(sequence(1, size(vq)), i ->
+        transform(concat(array(0), sequence(i, size(vq))), j ->
+          struct(CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
+                 IF(j = 0, element_at(vq, i),
+                    element_at(vq, i) * element_at(vq, j)) AS xy))))
+    """
+    # the explode reference is computed over the non-degenerate rows
+    # only (Spark's sequence(1, 0) DESCENDS, so the verbatim old
+    # formulation itself crashes on empty arrays); the oracle semantics
+    # (DuckDB generate_series(1, 0) = empty) are that null/empty rows
+    # contribute nothing.
+    ref = (
+        df.filter(F.size("embedding") > 0)
+        .selectExpr(f"{vq} AS vq")
+        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .groupBy(F.col("p.i").alias("i"), F.col("p.j").alias("j"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("p.xy").alias("sxy"))
+        .collect()
+    )
+
+    import tempfile
+
+    from incubator_beam_spark.queries import dataops as qd
+
+    d = tempfile.mkdtemp(prefix="gram_probe_null_")
+    df.write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    got = qd.emb_second_moments(spark, d).collect()
+    assert sorted((r.i, r.j, r.n, r.sxy) for r in got) == sorted(
+        (r.i, r.j, r.n, r.sxy) for r in ref
+    )
+
+
+def test_simhash_table_bit_identical_to_hof(spark):
+    """The vectorized mapInArrow simhash must equal the column-expression
+    simhash64 EXACTLY, including the edges: null text (null simhash),
+    empty/whitespace text (empty token array -> all ``bits`` set, the
+    2*0 >= 0 majority-tie rule), single-token docs, and heavy repeats."""
+    from incubator_beam_spark.dataops.dedup import simhash64, simhash_table
+
+    rows = [
+        (0, "spark catalyst optimizes declarative dataframe plans"),
+        (1, "spark catalyst optimizes declarative dataframe plans"),
+        (2, None),
+        (3, ""),
+        (4, "   \t  "),
+        (5, "token"),
+        (6, "a a a a a a b"),
+        (7, "x " * 500),
+        (8, "Mixed CASE punct!!! 123 élève"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    ref = {
+        r.doc_id: r.sh
+        for r in docs.select(
+            "doc_id", simhash64(F.col("text"), bits=32).alias("sh")
+        ).collect()
+    }
+    got = {r.doc_id: r.sh for r in simhash_table(docs, bits=32).collect()}
+    assert got == ref
+    # the empty-token edge really is the all-bits value, not 0 or null
+    assert got[3] == (1 << 32) - 1 and got[2] is None
+
+
+def test_simhash_table_rejects_bits_over_32(spark):
+    """ADVICE r11: bits > 32 silently diverged from simhash64 (int32
+    shifts past the operand width are undefined) — must raise."""
+    from incubator_beam_spark.dataops.dedup import simhash_table
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="32 bits"):
+        simhash_table(docs, bits=33)
+    with pytest.raises(ValueError, match="32 bits"):
+        simhash_table(docs, bits=0)
+
+
+def test_pq_encode_letbound_codes_unchanged(spark):
+    """The let-bound argmin must produce identical codes (ties to the
+    lowest centroid index, as array_position's first match guarantees)."""
+    from incubator_beam_spark.dataops.pq import pq_codebook, pq_encode
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3) * 0.1 + j * 0.01 for j in range(8)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    cb = pq_codebook(emb, n_centroids=4, m=4)
+    got = {r.vec_id: list(r.codes) for r in pq_encode(emb, cb).collect()}
+    # brute-force reference in python over the same quantized ints
+    import math
+
+    qrows = {
+        r.vec_id: [int(round(x * 10000)) for x in r.embedding]
+        for r in emb.collect()
+    }
+    sub = 2
+    for vid, vq in qrows.items():
+        want = []
+        for s in range(4):
+            dists = [
+                sum(
+                    (vq[s * sub + d] - cent[d]) ** 2 for d in range(sub)
+                )
+                for cent in cb[s]
+            ]
+            want.append(dists.index(min(dists)))
+        assert got[vid] == want, (vid, got[vid], want)
+
+
+def _naive_bpe(texts, k):
+    """Full-recount reference BPE (Sennrich semantics: overlapping
+    adjacent pairs all count; greedy left-to-right merge; ties break on
+    (weight DESC, left, right))."""
+    from collections import Counter
+
+    from incubator_beam_spark.dataops.bpe import END_OF_WORD
+
+    hist = Counter()
+    for t in texts:
+        for w in t.lower().strip().split():
+            if w:
+                hist[w] += 1
+    words = {w: list(w) + [END_OF_WORD] for w in hist}
+    merges = []
+    for step in range(k):
+        pairs = Counter()
+        for w, sym in words.items():
+            for i in range(len(sym) - 1):
+                pairs[(sym[i], sym[i + 1])] += hist[w]
+        if not pairs:
+            break
+        (a, b), wt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((step, a, b, wt))
+        for w, sym in words.items():
+            out = []
+            for c in sym:
+                if out and out[-1] == a and c == b:
+                    out[-1] = a + b
+                else:
+                    out.append(c)
+            words[w] = out
+    return merges
+
+
+def test_bpe_incremental_merge_sequence_and_job_count(spark):
+    """VERDICT r11 item 3: bpe_learn now maintains pair counts
+    incrementally (driver dict + per-step delta job) instead of
+    re-aggregating the full histogram twice per step. The merge
+    sequence must be IDENTICAL to the full-recount reference —
+    including chained merges whose outputs collide ('a'+'bc' vs
+    'ab'+'c'), overlap runs ('aaaa'), and the early-exhaustion break —
+    and the loop must cost at most k+2 Spark jobs (was 2k+1)."""
+    from incubator_beam_spark.dataops.bpe import bpe_learn
+
+    corpora = [
+        # chained merges + new-pair creation feeding later argmaxes
+        ["ab abc abcd abcd abcd ab ab", "bc bc bcd cd cd cd"],
+        # overlap runs: 'aaaa' counts (a,a) three times, merges to [aa, aa]
+        ["aaaa aaaa aaa aa baa aab"],
+        # early exhaustion: every word fully merges before k runs out
+        ["xy xy xy", "z z"],
+    ]
+    for texts in corpora:
+        docs = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        )
+        assert bpe_learn(docs, 12) == _naive_bpe(texts, 12), texts
+
+    # job-count bound: eager seed checkpoint + initial pair count +
+    # (k-1) delta jobs (the lazy syms checkpoints materialize inside
+    # them; the final step needs no delta)
+    docs = spark.createDataFrame(
+        [(0, "low lower lowest low low new newer newest")],
+        "doc_id long, text string",
+    )
+    docs.count()  # settle any lazy session work outside the window
+    k = 6
+    n0 = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    bpe_learn(docs, k)
+    n1 = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    assert n1 - n0 <= k + 2, f"bpe_learn({k}) ran {n1 - n0} jobs (> {k + 2})"
+
+
+def test_crawl_funnel_plan_stays_deduplicated(spark):
+    """r12 funnel restructure pin: the five stage rows assemble from ONE
+    tagged-union stats pass (docs_in(stage k) = docs_out(stage k-1) is
+    computed once, not re-aggregated per leg), and the shared artifacts
+    stay materialized — re-introducing a duplicate subtree shows up as
+    parquet-scan growth in the physical plan (pre-r12: 62 scans; after
+    the artifact materialization: 44; after the single-pass stats: 17)."""
+    import io
+    from contextlib import redirect_stdout
+
+    from incubator_beam_spark.queries.dataops import doc_crawl_funnel
+
+    df = doc_crawl_funnel(spark, SF_DIR)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert plan.count("Scan parquet") <= 20, plan.count("Scan parquet")
+    # at most one Python pack stage (packed is checkpointed — its three
+    # aggregate consumers read stored blocks; the checkpoint may render
+    # as an ExistingRDD scan, hiding the stage from the SQL plan)
+    assert plan.count("MapInPandas") <= 1, plan.count("MapInPandas")
+    # and the five output rows assemble from ONE stats row: the whole
+    # plan holds a single Generate node (the 5-struct array explode),
+    # named once in the tree and once in the node details; the LSH band
+    # fan-out sits behind the materialized artifacts
+    assert plan.count("Generate") == 2, plan
